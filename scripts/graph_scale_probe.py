@@ -11,6 +11,9 @@ Claims this backs:
   * pagerank's per-iteration cost is two node-keyed shuffles over a
     rank frame of one row per node; wall-clock per iteration grows
     ~linearly in edges, and sum(rank) == 1 holds on every variant.
+    Each row reports the path pagerank took (`pr_path`: "driver" when
+    the aggregated edge list, `pr_edges`, fits the broadcast budget,
+    else "distributed"), so only distributed rows time the loop.
 
 The 10x graphs are derived in-memory from the sf0.1 overlap graph
 (no synthetic testdata is written):
@@ -144,7 +147,8 @@ def probe(name, edges):
     n_tri = triangle_count(edges).collect()[0]["n_triangles"]
     t_tri = time.time() - t0
     t0 = time.time()
-    ranks = pagerank(edges, n_iter=10)
+    pr_stats = {}
+    ranks = pagerank(edges, n_iter=10, stats=pr_stats)
     row = ranks.agg(
         F.count(F.lit(1)).alias("n"), F.sum("rank").alias("s")
     ).collect()[0]
@@ -158,6 +162,10 @@ def probe(name, edges):
         "nodes": row["n"],
         "rank_sum": round(row["s"], 9),
         "pagerank10_sec": round(t_pr, 2),
+        # a factor small enough for pagerank's driver path is not a
+        # distributed-loop timing
+        "pr_path": pr_stats["path"],
+        "pr_edges": pr_stats["edges"],
     }
     print(json.dumps(out))
     return out

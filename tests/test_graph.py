@@ -1,5 +1,7 @@
 """connected_components / dedup_components: clique, chain, disconnected
-groups, undirected symmetry, and the max_iter convergence contract."""
+groups, undirected symmetry, and the max_iter convergence contract;
+pagerank on both of its paths (driver numpy and distributed loop);
+triangle_count and incremental_components."""
 
 from __future__ import annotations
 
@@ -17,6 +19,33 @@ def _edges(spark, pairs):
 
 def _labels(df):
     return {r["id"]: r["component"] for r in df.collect()}
+
+
+_BCAST = "spark.sql.autoBroadcastJoinThreshold"
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def pr_path(request, spark):
+    """Run a PageRank test on both paths: the default broadcast budget
+    collects these small graphs to the driver; -1 (no broadcasts)
+    forces the distributed join+groupBy loop."""
+    prev = spark.conf.get(_BCAST)
+    if request.param == "distributed":
+        spark.conf.set(_BCAST, "-1")
+    try:
+        yield request.param
+    finally:
+        spark.conf.set(_BCAST, prev)
+
+
+def _ranks(edges, path, **kw):
+    """pagerank -> {id: rank}, asserting the size gate took `path`."""
+    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
+
+    stats = {}
+    out = pagerank(edges, stats=stats, **kw)
+    assert stats["path"] == path, stats
+    return {r["id"]: r["rank"] for r in out.collect()}
 
 
 def test_clique_collapses_to_min_id(spark):
@@ -132,12 +161,10 @@ def test_adversarial_id_layout_converges_logarithmically(spark):
     assert stats["rounds"] <= 12, stats
 
 
-def test_pagerank_matches_numpy_power_iteration(spark):
+def test_pagerank_matches_numpy_power_iteration(spark, pr_path):
     import random
 
     import numpy as np
-
-    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
 
     rng = random.Random(42)
     n = 40
@@ -150,12 +177,7 @@ def test_pagerank_matches_numpy_power_iteration(spark):
             if a != b
         }
     )
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            _edges(spark, pairs), damping=0.85, n_iter=10
-        ).collect()
-    }
+    got = _ranks(_edges(spark, pairs), pr_path, damping=0.85, n_iter=10)
 
     nodes = sorted({x for ab in pairs for x in ab})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -175,17 +197,80 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_directed_dangling_mass(spark):
-    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
-
+def test_pagerank_directed_dangling_mass(spark, pr_path):
     # 1 -> 2 -> 3, node 3 dangling: mass must be conserved.
     e = _edges(spark, [(1, 2), (2, 3)])
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(e, undirected=False, n_iter=20).collect()
-    }
+    got = _ranks(e, pr_path, undirected=False, n_iter=20)
     assert abs(sum(got.values()) - 1.0) < 1e-9
     assert got[3] > got[2] > got[1]
+
+
+@pytest.mark.parametrize("undirected", [True, False])
+def test_pagerank_null_endpoint_keeps_unit_mass(spark, pr_path, undirected):
+    # a null endpoint used to leak mass through the inner joins
+    # (sum 0.472 undirected, 0.306 directed); such edges are dropped
+    e = _edges(spark, [(1, 2), (2, 3), (3, None)])
+    got = _ranks(e, pr_path, undirected=undirected)
+    assert set(got) == {1, 2, 3}
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+def test_pagerank_empty_edge_table(spark, pr_path):
+    from pyspark.sql.types import StringType
+
+    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
+
+    e = spark.createDataFrame([], "id_a string, id_b string")
+    stats = {}
+    out = pagerank(e, stats=stats)
+    assert stats == {"path": pr_path, "edges": 0}
+    assert out.schema["id"].dataType == StringType()
+    assert out.columns == ["id", "rank"]
+    assert out.collect() == []
+
+
+def test_pagerank_budget_boundary(spark):
+    """The largest edge list inside the broadcast budget takes the
+    driver path; one more edge takes the distributed path."""
+    from txf_continuous_data_pipeline_spark.operators.graph import (
+        _driver_edge_budget,
+        pagerank,
+    )
+
+    prev = spark.conf.get(_BCAST)
+    try:
+        spark.conf.set(_BCAST, "192b")
+        budget = _driver_edge_budget(spark)
+        assert budget >= 1
+        chain = [(i, i + 1) for i in range(budget + 1)]
+        for pairs, path in ((chain[:-1], "driver"), (chain, "distributed")):
+            stats = {}
+            got = pagerank(
+                _edges(spark, pairs), undirected=False, stats=stats
+            ).collect()
+            assert stats == {"path": path, "edges": len(pairs)}
+            assert abs(sum(r["rank"] for r in got) - 1.0) < 1e-9
+    finally:
+        spark.conf.set(_BCAST, prev)
+
+
+def test_pagerank_driver_path_job_count(spark):
+    """The driver path is one materialization of the edge list plus
+    one Arrow collect: build + collect stay within 6 Spark jobs (the
+    distributed loop started ~50 on the same graph)."""
+    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
+
+    sc = spark.sparkContext
+    group = "test_pagerank_driver_path_job_count"
+    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (1, 4), (4, 5)])
+    stats = {}
+    sc.setJobGroup(group, "pagerank driver path")
+    try:
+        pagerank(e, stats=stats).collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert stats["path"] == "driver"
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
 
 
 def test_triangle_count_matches_bruteforce(spark):
@@ -237,12 +322,10 @@ def test_triangle_count_known_shapes(spark):
     )
 
 
-def test_weighted_pagerank_matches_numpy(spark):
+def test_weighted_pagerank_matches_numpy(spark, pr_path):
     import random
 
     import numpy as np
-
-    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
 
     rng = random.Random(17)
     n = 20
@@ -255,12 +338,7 @@ def test_weighted_pagerank_matches_numpy(spark):
         [(a, b, float(w)) for (a, b), w in edges.items()],
         "id_a long, id_b long, w double",
     )
-    got = {
-        r["id"]: r["rank"]
-        for r in pagerank(
-            df, damping=0.85, n_iter=10, weight_col="w"
-        ).collect()
-    }
+    got = _ranks(df, pr_path, damping=0.85, n_iter=10, weight_col="w")
 
     # numpy reference: symmetrized weighted transition matrix
     sym = {}
@@ -294,13 +372,11 @@ def test_star_hub_graph_fast_and_correct(spark):
     assert all(v == 0 for v in got.values())
 
 
-def test_unweighted_pagerank_ignores_duplicate_edges(spark):
-    from txf_continuous_data_pipeline_spark.operators.graph import pagerank
-
+def test_unweighted_pagerank_ignores_duplicate_edges(spark, pr_path):
     base = _edges(spark, [(1, 2), (1, 3)])
     dup = _edges(spark, [(1, 2), (1, 2), (1, 3)])
-    r1 = {r["id"]: r["rank"] for r in pagerank(base, n_iter=6).collect()}
-    r2 = {r["id"]: r["rank"] for r in pagerank(dup, n_iter=6).collect()}
+    r1 = _ranks(base, pr_path, n_iter=6)
+    r2 = _ranks(dup, pr_path, n_iter=6)
     for k in r1:
         assert abs(r1[k] - r2[k]) < 1e-12, k
 

@@ -46,8 +46,10 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from .dedup import _size_conf_bytes
 
 
 def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -278,6 +280,59 @@ def dedup_components(
     )
 
 
+def _driver_edge_budget(spark) -> int:
+    """Most aggregated edges pagerank collects to the driver, or -1
+    when the driver path is off.
+
+    Derived from spark.sql.autoBroadcastJoinThreshold, which already
+    means "small enough to hold on the driver and every executor"; an
+    edge row (two ids + a double weight) is charged 64 bytes, a
+    generous bound on its Arrow footprint. A negative threshold (-1:
+    no broadcasts) keeps every graph on the distributed path."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if raw.strip().startswith("-"):
+        return -1
+    # capped so the probe's limit(budget + 1) stays a valid int
+    return min(_size_conf_bytes(raw, default=10 << 20) // 64, (1 << 31) - 2)
+
+
+def _pagerank_local(spark, tbl, id_type, *, damping, n_iter, undirected):
+    """The distributed loop's power iteration in numpy over a collected
+    Arrow (s, d, _w) edge list; one createDataFrame of (id, rank).
+    Per-edge shares and the restart/dangling terms use the same
+    formulas and operation order as the Spark path."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    s, d = tbl.column("s"), tbl.column("d")
+    ids = pc.unique(pa.chunked_array(s.chunks + d.chunks, type=s.type))
+    si = pc.index_in(s, value_set=ids).to_numpy()
+    di = pc.index_in(d, value_set=ids).to_numpy()
+    w = tbl.column("_w").to_numpy()
+    n = len(ids)
+    deg = np.bincount(si, weights=w, minlength=n)
+    # dangling = no out-edge at all (the Spark path's left_anti)
+    dangling = np.bincount(si, minlength=n) == 0
+    r = np.full(n, 1.0 / max(n, 1))
+    for _ in range(n_iter if n else 0):  # no edges -> empty frame
+        inn = np.bincount(di, weights=r[si] * w / deg[si], minlength=n)
+        if not undirected:
+            inn = inn + r[dangling].sum() / float(n)
+        r = (1.0 - damping) / n + damping * inn
+    schema = StructType(
+        [
+            StructField("id", id_type),
+            StructField("rank", DoubleType(), False),
+        ]
+    )
+    return spark.createDataFrame(
+        pa.table({"id": ids, "rank": pa.array(r, pa.float64())}),
+        schema=schema,
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "id_a",
@@ -287,6 +342,7 @@ def pagerank(
     n_iter: int = 10,
     undirected: bool = True,
     weight_col: str | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """PageRank over an edge table -> (id, rank), sum(rank) == 1.
 
@@ -296,17 +352,30 @@ def pagerank(
     with probability 1-damping. Undirected inputs are symmetrized so
     every node has out-degree >= 1 (no dangling mass); for directed
     inputs, dangling-node mass is redistributed uniformly each
-    iteration via one 1-row broadcast scalar.
+    iteration via one 1-row broadcast scalar. Edges with a null
+    endpoint are dropped (a null node cannot join, so it would leak
+    rank mass).
 
-    Per iteration: one join of the (static, checkpointed,
-    degree-annotated) edge table with the current rank frame on src +
-    one groupBy(dst) sum — both shuffles keyed on node id. Rank frame
-    is one row per node; lineage cut per iteration with
-    localCheckpoint, same discipline as connected_components. Fixed
-    n_iter (deterministic plan count) rather than a convergence probe:
-    power iteration's error decays as damping^k, so 10 iterations ≈
-    0.2% mass error — callers wanting tighter bounds raise n_iter.
+    Two paths over the same aggregated edge list, which is computed
+    once (one pass over the input) into a local checkpoint:
+      - driver: a probe collects at most budget + 1 edges through
+        Arrow (_driver_edge_budget); when the whole list arrived, the
+        power iteration runs in numpy - one collect instead of ~40
+        Spark jobs of per-iteration joins on a tiny graph;
+      - distributed: above the budget, per iteration one join of the
+        (static, checkpointed, degree-annotated) edge table with the
+        current rank frame on src + one groupBy(dst) sum - both
+        shuffles keyed on node id; the rank frame is one row per node.
+    Fixed n_iter (deterministic plan count) rather than a convergence
+    probe: power iteration's error decays as damping^k, so 10
+    iterations ≈ 0.2% mass error — callers wanting tighter bounds raise
+    n_iter.
+
+    stats, if given, is filled with {"path": "driver" | "distributed",
+    "edges": n} - n is the aggregated directed edge count the size gate
+    compared against its budget.
     """
+    spark = edges.sparkSession
     wcol = (
         F.col(weight_col).cast("double")
         if weight_col is not None
@@ -314,7 +383,7 @@ def pagerank(
     )
     e = edges.select(
         F.col(src).alias("s"), F.col(dst).alias("d"), wcol.alias("_w")
-    )
+    ).where(F.col("s").isNotNull() & F.col("d").isNotNull())
     if undirected:
         e = e.unionByName(
             e.select(
@@ -327,13 +396,30 @@ def pagerank(
         # implicit weights - each distinct edge carries weight 1 (the
         # docstring's uniform out-weight promise)
         e = e.withColumn("_w", F.lit(1.0))
+    # One pass over the input for either path: the size probe fills
+    # this lazy checkpoint, and the distributed build reads it back.
+    e = e.localCheckpoint(eager=False)
+    budget = _driver_edge_budget(spark)
+    if budget >= 0:
+        tbl = e.limit(budget + 1).toArrow()
+        if tbl.num_rows <= budget:
+            if stats is not None:
+                stats.update(path="driver", edges=tbl.num_rows)
+            return _pagerank_local(
+                spark, tbl, e.schema["s"].dataType,
+                damping=damping, n_iter=n_iter, undirected=undirected,
+            )
     # _deg is the out-weight normalizer: edge share = w / sum(out w)
     out_deg = e.groupBy("s").agg(F.sum("_w").alias("_deg"))
+    obs = Observation()
     ew = (
         e.join(out_deg, "s")
+        .observe(obs, F.count(F.lit(1)).alias("edges"))
         .repartition(F.col("s"))
         .localCheckpoint(eager=True)
     )
+    if stats is not None:
+        stats.update(path="distributed", edges=obs.get["edges"])
     nodes = (
         e.select(F.col("s").alias("id"))
         .unionByName(e.select(F.col("d").alias("id")))
@@ -380,9 +466,10 @@ def pagerank(
         )
         # Cut lineage every third iteration (and on the last): an eager
         # checkpoint per iteration costs one materialization job each,
-        # and a 3-iteration plan is still trivially analyzable — the
-        # growth the cut prevents is exponential-with-depth, not
-        # per-step.
+        # and a 3-iteration plan is still trivially analyzable. Uncut,
+        # the directed plan doubles per iteration (it reads `ranks`
+        # twice: the contribution join and the dangling anti-join); the
+        # undirected plan reads it once and grows linearly.
         if it % 3 == 2 or it == n_iter - 1:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
