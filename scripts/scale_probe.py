@@ -9,10 +9,15 @@ groups of size >= R - which is exactly the heavy tail the banded-LSH /
 components design must survive. Nothing is written to /root/testdata.
 
 For each scale it records: docs, LSH candidate pairs, verified pairs
-(jaccard >= 0.5), component count / max size / pointer-doubling rounds,
-and stage wall times. The claim under test: candidate pairs grow
-~linearly with corpus size (subquadratic - the n^2 pair space is never
-enumerated) and component rounds grow ~log(max component size).
+(jaccard >= 0.5), component count / max size / rounds, the path
+connected_components took and its input edge count, and stage wall
+times. `cc_path` is "driver" when the verified pair list, `cc_edges`,
+fits the broadcast budget (labels in numpy; `cc_rounds` counts its hook
+rounds), else "distributed" (`cc_rounds` counts star rounds) - so a
+small factor on the driver path is never read as a star-round timing.
+The claim under test: candidate pairs grow ~linearly with corpus size
+(subquadratic - the n^2 pair space is never enumerated) and component
+rounds grow ~log(max component size).
 
 Usage: python scripts/scale_probe.py [replicas]   (default 10 = sf1-eq)
 """
@@ -117,6 +122,8 @@ def probe(spark, docs, label: str) -> dict:
         "verified_pairs": n_pairs,
         "components": n_comp,
         "max_component": max_comp,
+        "cc_path": stats["path"],
+        "cc_edges": stats["edges"],
         "cc_rounds": stats["rounds"],
         "sec_shingle": round(t_sets - t0, 1),
         "sec_candidates": round(t_cand - t_sets, 1),
@@ -172,6 +179,7 @@ def main() -> None:
                     6,
                 ),
                 "rounds": [r["cc_rounds"] for r in results],
+                "paths": [r["cc_path"] for r in results],
             }
         )
     )

@@ -1,9 +1,11 @@
 """connected_components / dedup_components: clique, chain, disconnected
 groups, undirected symmetry, and the max_iter convergence contract;
-pagerank on both of its paths (driver numpy and distributed loop);
-triangle_count and incremental_components."""
+connected_components and pagerank on both of their paths (driver numpy
+and distributed loop); triangle_count and incremental_components."""
 
 from __future__ import annotations
+
+import contextlib
 
 import pytest
 
@@ -24,18 +26,38 @@ def _labels(df):
 _BCAST = "spark.sql.autoBroadcastJoinThreshold"
 
 
-@pytest.fixture(params=["driver", "distributed"])
-def pr_path(request, spark):
-    """Run a PageRank test on both paths: the default broadcast budget
-    collects these small graphs to the driver; -1 (no broadcasts)
-    forces the distributed join+groupBy loop."""
+@contextlib.contextmanager
+def _bcast_threshold(spark, value):
+    """Set the broadcast threshold the graph operators' driver edge
+    budget derives from ("-1" turns their driver path off); the
+    previous value is restored afterwards."""
     prev = spark.conf.get(_BCAST)
-    if request.param == "distributed":
-        spark.conf.set(_BCAST, "-1")
+    spark.conf.set(_BCAST, value)
     try:
-        yield request.param
+        yield
     finally:
         spark.conf.set(_BCAST, prev)
+
+
+@pytest.fixture(params=["driver", "distributed"])
+def gate_path(request, spark):
+    """Run a pagerank / connected_components test on both paths: the
+    default broadcast budget collects these small graphs to the driver;
+    -1 forces the distributed loop."""
+    if request.param == "driver":
+        yield request.param
+    else:
+        with _bcast_threshold(spark, "-1"):
+            yield request.param
+
+
+def _components(edges, path, **kw):
+    """connected_components -> {id: component}, asserting the size gate
+    took `path`."""
+    stats = {}
+    out = connected_components(edges, stats=stats, **kw)
+    assert stats["path"] == path, stats
+    return _labels(out)
 
 
 def _ranks(edges, path, **kw):
@@ -55,10 +77,11 @@ def test_clique_collapses_to_min_id(spark):
     assert got == {10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_chain_converges_within_diameter_rounds(spark):
-    # 0-1-2-...-7 chain: diameter 7, min-label floods down to 0.
+def test_chain_converges_within_diameter_rounds(spark, gate_path):
+    # 0-1-2-...-7 chain: diameter 7, min-label floods down to 0; on the
+    # distributed path the exact confirm pass ends the loop.
     pairs = [(i, i + 1) for i in range(7)]
-    got = _labels(connected_components(_edges(spark, pairs), max_iter=8))
+    got = _components(_edges(spark, pairs), gate_path, max_iter=8)
     assert got == {i: 0 for i in range(8)}
 
 
@@ -76,15 +99,21 @@ def test_edge_direction_is_irrelevant(spark):
 
 
 def test_max_iter_exhaustion_raises_by_default(spark):
-    # A 9-hop chain cannot converge in 2 rounds -> strict raises.
+    # A 9-hop chain cannot converge in 2 star rounds -> strict raises.
+    # (max_iter bounds the distributed loop only; the driver path
+    # always reaches its fixpoint.)
     pairs = [(i, i + 1) for i in range(9)]
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with _bcast_threshold(spark, "-1"), pytest.raises(
+        RuntimeError, match="did not converge"
+    ):
         connected_components(_edges(spark, pairs), max_iter=2)
 
 
 def test_max_iter_exhaustion_warns_when_not_strict(spark):
     pairs = [(i, i + 1) for i in range(9)]
-    with pytest.warns(RuntimeWarning, match="did not converge"):
+    with _bcast_threshold(spark, "-1"), pytest.warns(
+        RuntimeWarning, match="did not converge"
+    ):
         connected_components(_edges(spark, pairs), max_iter=2, strict=False)
 
 
@@ -111,7 +140,7 @@ def test_stop_shingle_filter_drops_only_hot_shingles(spark):
     assert stop_shingle_filter(inv, max_doc_freq=10).count() == inv.count()
 
 
-def test_random_graph_matches_union_find(spark):
+def test_random_graph_matches_union_find(spark, gate_path):
     # Differential against a pure-Python union-find on a seeded random
     # graph: mixed component shapes (cliques, chains, stars, isolated
     # pairs) that no hand-written case enumerates.
@@ -143,25 +172,92 @@ def test_random_graph_matches_union_find(spark):
         group_min = min(y for y in touched if find(y) == root)
         want[x] = group_min
 
-    got = _labels(connected_components(_edges(spark, pairs)))
+    got = _components(_edges(spark, pairs), gate_path)
     assert got == want
 
 
-def test_adversarial_id_layout_converges_logarithmically(spark):
+def test_adversarial_id_layout_converges_logarithmically(spark, gate_path):
     # Descending ids along a chain: min-label propagation (the previous
     # implementation here) needs O(n) rounds on this layout because a
     # node's stale label never learns a smaller value to jump through.
-    # The star rounds must close a 300-node chain in ~log2(n) rounds.
+    # The star rounds must close a 300-node chain in ~log2(n) rounds;
+    # the driver path's hook + pointer-jump rounds must do no worse.
     pairs = [(300 - i, 300 - i - 1) for i in range(299)]
     stats = {}
     got = _labels(
         connected_components(_edges(spark, pairs), stats=stats)
     )
+    assert stats["path"] == gate_path, stats
     assert got == {i: 1 for i in range(1, 301)}
     assert stats["rounds"] <= 12, stats
 
 
-def test_pagerank_matches_numpy_power_iteration(spark, pr_path):
+def test_components_null_endpoints_dropped(spark, gate_path):
+    # an edge with a null endpoint used to put a (NULL, NULL) row in
+    # the output; such edges are dropped, a self-loop alone keeps its
+    # node
+    e = _edges(spark, [(1, 2), (2, 3), (3, None), (7, 7), (None, None)])
+    stats = {}
+    got = _labels(connected_components(e, stats=stats))
+    assert stats["path"] == gate_path, stats
+    assert stats["edges"] == 3, stats
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7}
+
+
+def test_components_empty_edge_table(spark, gate_path):
+    from pyspark.sql.types import StringType
+
+    e = spark.createDataFrame([], "id_a string, id_b string")
+    stats = {}
+    out = connected_components(e, stats=stats)
+    assert stats["path"] == gate_path, stats
+    assert stats["edges"] == 0, stats
+    assert out.columns == ["id", "component"]
+    assert out.schema["id"].dataType == StringType()
+    assert out.schema["component"].dataType == StringType()
+    assert out.collect() == []
+
+
+def test_components_budget_boundary(spark):
+    """The largest edge list inside the broadcast budget takes the
+    driver path; one more edge takes the distributed path."""
+    from txf_continuous_data_pipeline_spark.operators.graph import (
+        _driver_edge_budget,
+    )
+
+    with _bcast_threshold(spark, "192b"):
+        budget = _driver_edge_budget(spark)
+        assert budget >= 1
+        chain = [(i + 1, i) for i in range(budget + 1)]
+        for pairs, path in ((chain[:-1], "driver"), (chain, "distributed")):
+            stats = {}
+            got = _labels(
+                connected_components(_edges(spark, pairs), stats=stats)
+            )
+            assert stats["path"] == path, stats
+            assert stats["edges"] == len(pairs), stats
+            assert got == {i: 0 for i in range(len(pairs) + 1)}
+
+
+def test_components_driver_path_job_count(spark):
+    """The driver path is one Arrow collect of the checkpointed edge
+    list: build + collect stay within 3 Spark jobs (the star rounds
+    started ~30 on the same graph)."""
+    sc = spark.sparkContext
+    group = "test_components_driver_path_job_count"
+    e = _edges(spark, [(1, 2), (2, 3), (5, 4), (6, 6), (9, 8), (8, 7)])
+    stats = {}
+    sc.setJobGroup(group, "connected_components driver path")
+    try:
+        got = _labels(connected_components(e, stats=stats))
+    finally:
+        sc.setJobGroup(None, None)
+    assert stats["path"] == "driver"
+    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6, 7: 7, 8: 7, 9: 7}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
+def test_pagerank_matches_numpy_power_iteration(spark, gate_path):
     import random
 
     import numpy as np
@@ -177,7 +273,7 @@ def test_pagerank_matches_numpy_power_iteration(spark, pr_path):
             if a != b
         }
     )
-    got = _ranks(_edges(spark, pairs), pr_path, damping=0.85, n_iter=10)
+    got = _ranks(_edges(spark, pairs), gate_path, damping=0.85, n_iter=10)
 
     nodes = sorted({x for ab in pairs for x in ab})
     idx = {v: i for i, v in enumerate(nodes)}
@@ -197,25 +293,25 @@ def test_pagerank_matches_numpy_power_iteration(spark, pr_path):
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_directed_dangling_mass(spark, pr_path):
+def test_pagerank_directed_dangling_mass(spark, gate_path):
     # 1 -> 2 -> 3, node 3 dangling: mass must be conserved.
     e = _edges(spark, [(1, 2), (2, 3)])
-    got = _ranks(e, pr_path, undirected=False, n_iter=20)
+    got = _ranks(e, gate_path, undirected=False, n_iter=20)
     assert abs(sum(got.values()) - 1.0) < 1e-9
     assert got[3] > got[2] > got[1]
 
 
 @pytest.mark.parametrize("undirected", [True, False])
-def test_pagerank_null_endpoint_keeps_unit_mass(spark, pr_path, undirected):
+def test_pagerank_null_endpoint_keeps_unit_mass(spark, gate_path, undirected):
     # a null endpoint used to leak mass through the inner joins
     # (sum 0.472 undirected, 0.306 directed); such edges are dropped
     e = _edges(spark, [(1, 2), (2, 3), (3, None)])
-    got = _ranks(e, pr_path, undirected=undirected)
+    got = _ranks(e, gate_path, undirected=undirected)
     assert set(got) == {1, 2, 3}
     assert abs(sum(got.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_empty_edge_table(spark, pr_path):
+def test_pagerank_empty_edge_table(spark, gate_path):
     from pyspark.sql.types import StringType
 
     from txf_continuous_data_pipeline_spark.operators.graph import pagerank
@@ -223,7 +319,7 @@ def test_pagerank_empty_edge_table(spark, pr_path):
     e = spark.createDataFrame([], "id_a string, id_b string")
     stats = {}
     out = pagerank(e, stats=stats)
-    assert stats == {"path": pr_path, "edges": 0}
+    assert stats == {"path": gate_path, "edges": 0}
     assert out.schema["id"].dataType == StringType()
     assert out.columns == ["id", "rank"]
     assert out.collect() == []
@@ -237,9 +333,7 @@ def test_pagerank_budget_boundary(spark):
         pagerank,
     )
 
-    prev = spark.conf.get(_BCAST)
-    try:
-        spark.conf.set(_BCAST, "192b")
+    with _bcast_threshold(spark, "192b"):
         budget = _driver_edge_budget(spark)
         assert budget >= 1
         chain = [(i, i + 1) for i in range(budget + 1)]
@@ -250,8 +344,6 @@ def test_pagerank_budget_boundary(spark):
             ).collect()
             assert stats == {"path": path, "edges": len(pairs)}
             assert abs(sum(r["rank"] for r in got) - 1.0) < 1e-9
-    finally:
-        spark.conf.set(_BCAST, prev)
 
 
 def test_pagerank_driver_path_job_count(spark):
@@ -322,7 +414,7 @@ def test_triangle_count_known_shapes(spark):
     )
 
 
-def test_weighted_pagerank_matches_numpy(spark, pr_path):
+def test_weighted_pagerank_matches_numpy(spark, gate_path):
     import random
 
     import numpy as np
@@ -338,7 +430,7 @@ def test_weighted_pagerank_matches_numpy(spark, pr_path):
         [(a, b, float(w)) for (a, b), w in edges.items()],
         "id_a long, id_b long, w double",
     )
-    got = _ranks(df, pr_path, damping=0.85, n_iter=10, weight_col="w")
+    got = _ranks(df, gate_path, damping=0.85, n_iter=10, weight_col="w")
 
     # numpy reference: symmetrized weighted transition matrix
     sym = {}
@@ -372,16 +464,16 @@ def test_star_hub_graph_fast_and_correct(spark):
     assert all(v == 0 for v in got.values())
 
 
-def test_unweighted_pagerank_ignores_duplicate_edges(spark, pr_path):
+def test_unweighted_pagerank_ignores_duplicate_edges(spark, gate_path):
     base = _edges(spark, [(1, 2), (1, 3)])
     dup = _edges(spark, [(1, 2), (1, 2), (1, 3)])
-    r1 = _ranks(base, pr_path, n_iter=6)
-    r2 = _ranks(dup, pr_path, n_iter=6)
+    r1 = _ranks(base, gate_path, n_iter=6)
+    r2 = _ranks(dup, gate_path, n_iter=6)
     for k in r1:
         assert abs(r1[k] - r2[k]) < 1e-12, k
 
 
-def test_incremental_components_fold_equals_batch(spark, sf_dir):
+def test_incremental_components_fold_equals_batch(spark, sf_dir, gate_path):
     """incremental_components: folding edge batches into a stored
     label table must equal batch connected_components over the union
     edge set EXACTLY - including cross-batch merges of previously
@@ -414,10 +506,7 @@ def test_incremental_components_fold_equals_batch(spark, sf_dir):
     union = spark.createDataFrame(
         [e for rows in batches for e in rows], "id_a long, id_b long"
     )
-    want = {
-        (r["id"], r["component"])
-        for r in connected_components(union, "id_a", "id_b").collect()
-    }
+    want = set(_components(union, gate_path).items())
     assert got == want
     # the undercut actually happened: everything reachable from 5
     # carries label 5

@@ -56,6 +56,28 @@ def test_read_table_normalizes_all_timestamp_flavors(spark, tmp_path, flavor):
     assert got == ROWS, f"{flavor}: wall-clock values drifted"
 
 
+def test_read_table_follows_in_place_flavor_rewrite(spark, tmp_path):
+    """The nanos decision comes from the footer read on every call: a
+    table rewritten in place from ns to us timestamps (the drift
+    timestamp_flavors exists to catch) must not keep the ns path."""
+    for flavor in ("ns", "us_naive", "ns"):
+        pq.write_table(
+            pa.table(
+                {
+                    "event_id": pa.array([1, 2, 3], pa.int64()),
+                    "ts": pa.array(ROWS, FLAVORS[flavor]),
+                }
+            ),
+            tmp_path / "events.parquet",
+        )
+        df = read_table(spark, str(tmp_path), "events")
+        assert isinstance(df.schema["ts"].dataType, TimestampType), flavor
+        got = sorted(
+            r.ts.replace(tzinfo=None) for r in df.select("ts").collect()
+        )
+        assert got == ROWS, flavor
+
+
 def test_micros_of_day_accepts_ntz(spark):
     """The helper itself must be NTZ-polymorphic for ad-hoc callers that
     bypass read_table."""

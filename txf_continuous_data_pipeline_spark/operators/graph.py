@@ -40,6 +40,10 @@ Scale notes (100 TB):
     hashes); a signature match is then CONFIRMED by an exact
     label-consistency join before the loop exits, so a 64-bit
     coincidence cannot yield wrong output.
+  - the star rounds only run above the driver edge budget
+    (_driver_edge_budget, from spark.sql.autoBroadcastJoinThreshold);
+    an edge list that fits is collected once and labeled in numpy,
+    the same size gate pagerank uses.
 """
 
 from __future__ import annotations
@@ -111,6 +115,72 @@ def _star_phase(e: DataFrame, phase: str, *, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
+def _driver_edge_budget(spark) -> int:
+    """Most edges a graph operator (pagerank, connected_components)
+    collects to the driver to run its loop in numpy, or -1 when the
+    driver path is off.
+
+    Derived from spark.sql.autoBroadcastJoinThreshold, which already
+    means "small enough to hold on the driver and every executor"; an
+    edge row (two ids, plus a double weight for pagerank) is charged 64
+    bytes, a generous bound on its Arrow footprint. A negative
+    threshold (-1: no broadcasts) keeps every graph on the distributed
+    path."""
+    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    if raw.strip().startswith("-"):
+        return -1
+    # capped so the probe's limit(budget + 1) stays a valid int
+    return min(_size_conf_bytes(raw, default=10 << 20) // 64, (1 << 31) - 2)
+
+
+def _components_local(spark, tbl, id_type, stats):
+    """Min-id components of a collected Arrow (a, b) edge list in numpy
+    -> one createDataFrame of (id, component).
+
+    Node indices follow sorted id order, so the smallest index of a
+    group is its smallest id. Each round hooks every root that has an
+    edge to a smaller root onto the smallest such root (vectorised
+    minimum.at), then pointer-jumps every node to its root until the
+    parent array stops changing. A hook only ever points a root at a
+    smaller one, so the trees stay acyclic and each root is its tree's
+    minimum; the loop ends when no edge joins two roots, i.e. each tree
+    is exactly one component."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import StructField, StructType
+
+    a, b = tbl.column("a"), tbl.column("b")
+    ids = pc.unique(pa.chunked_array(a.chunks + b.chunks, type=a.type))
+    ids = ids.take(pc.sort_indices(ids))
+    ai = pc.index_in(a, value_set=ids).to_numpy()
+    bi = pc.index_in(b, value_set=ids).to_numpy()
+    parent = np.arange(len(ids))
+    rounds = 0
+    while True:
+        ra, rb = parent[ai], parent[bi]
+        cross = ra != rb
+        if not cross.any():
+            break
+        rounds += 1
+        ra, rb = ra[cross], rb[cross]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    if stats is not None:
+        stats.update(path="driver", edges=tbl.num_rows, rounds=rounds)
+    schema = StructType(
+        [StructField("id", id_type), StructField("component", id_type)]
+    )
+    return spark.createDataFrame(
+        pa.table({"id": ids, "component": ids.take(pa.array(parent))}),
+        schema=schema,
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -123,39 +193,69 @@ def connected_components(
     """Resolve undirected edges to (id, component) with component = min
     node id reachable. Only nodes that appear in an edge are returned
     (isolated rows are their own singleton group by definition — union
-    them in at the call site if needed).
+    them in at the call site if needed); a self-loop alone keeps its
+    node. Edges with a null endpoint are dropped.
 
-    Convergence contract: alternating star rounds converge in
-    O(log n) rounds independent of id placement (see module docstring),
-    so the default max_iter=20 covers ~10^6-diameter graphs with margin.
-    If the loop exhausts max_iter without the exact convergence check
-    passing, the result is WRONG (partially contracted), so strict=True
-    (default) raises; strict=False downgrades to a warning for
-    exploratory use.
+    Two paths over the same input edges, which are read once into a
+    lazy local checkpoint (the pagerank size gate):
+      - driver: a probe collects at most budget + 1 edges through Arrow
+        (_driver_edge_budget); when the whole list arrived, numpy hooks
+        and pointer-jumps to the exact components (_components_local) -
+        one collect instead of ~30 Spark jobs of star rounds on a tiny
+        graph. max_iter does not apply: the fixpoint is always reached.
+      - distributed: above the budget, the star rounds below.
 
-    stats, if given, is filled with {"rounds": n} — the number of
-    large+small star rounds actually executed, the scale-probe
-    observable (SCALE.md quantifies its growth vs corpus size)."""
+    Convergence contract (distributed path): alternating star rounds
+    converge in O(log n) rounds independent of id placement (see module
+    docstring), so the default max_iter=20 covers ~10^6-diameter graphs
+    with margin. If the loop exhausts max_iter without the exact
+    convergence check passing, the result is WRONG (partially
+    contracted), so strict=True (default) raises; strict=False
+    downgrades to a warning for exploratory use.
+
+    stats, if given, is filled with {"path": "driver" | "distributed",
+    "edges": n, "rounds": r}: n is the input edge count (null endpoints
+    dropped) the size gate compared against its budget; r is the number
+    of large+small star rounds executed, or on the driver path the
+    numpy hook rounds - the scale-probe observable (SCALE.md quantifies
+    its growth vs corpus size)."""
+    spark = edges.sparkSession
+    # One pass over the input for either path: the size probe fills
+    # this lazy checkpoint, and the distributed build reads it back.
+    # Null endpoints are dropped here, before the path choice, so both
+    # paths agree (least/greatest alone would skip the null and keep
+    # the other endpoint as a node).
+    ck = (
+        edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
+        .select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .localCheckpoint(eager=False)
+    )
+    budget = _driver_edge_budget(spark)
+    if budget >= 0:
+        tbl = ck.limit(budget + 1).toArrow()
+        if tbl.num_rows <= budget:
+            return _components_local(
+                spark, tbl, ck.schema["a"].dataType, stats
+            )
     # repartition("a") FIRST, dedup after: HashPartitioning(a) satisfies
     # the (a, b) clustering the dedup aggregate needs (same-key rows
     # share a), so entry canonicalization costs ONE exchange instead of
     # distinct's (a, b) exchange followed by the repartition (r14,
     # guide §2.4 "two operations keyed the same way share one exchange").
     e0 = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
+        ck.where(F.col("a") != F.col("b"))
         .repartition(F.col("a"))
         .dropDuplicates(["a", "b"])
         .localCheckpoint(eager=True)
     )
-    # Node universe from the ORIGINAL edges (keeps self-loop-only nodes,
-    # which _canon_edges drops from the working set).
+    # Node universe from the un-deduplicated edges (keeps self-loop-only
+    # nodes, which the working set e0 drops).
     nodes = (
-        edges.select(F.col(src).alias("id"))
-        .unionByName(edges.select(F.col(dst).alias("id")))
+        ck.select(F.col("a").alias("id"))
+        .unionByName(ck.select(F.col("b").alias("id")))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -180,60 +280,14 @@ def connected_components(
         ).collect()[0]
         return (row["n"], row["x"])
 
-    e = e0
-    sig = _sig(e)
-    converged = False
-    final_lab = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # No repartition before the checkpoint: the phase's trailing
-        # distinct already hash-partitioned on (a, b), and the next
-        # round's window re-shuffles on a regardless — an extra
-        # repartition(a) here is a pure wasted exchange per round.
-        # inner large phase skips its distinct (see _star_phase dedup
-        # note): 3 exchanges per round instead of 4, identical fixpoint
-        e = _star_phase(
-            _star_phase(e, "large", dedup=False), "small"
-        ).localCheckpoint(eager=True)
-        new_sig = _sig(e)
-        if new_sig == sig:
-            # Signature stability is probabilistic (64-bit xor); confirm
-            # exactly: every ORIGINAL edge must connect same-labeled
-            # nodes, which is necessary and sufficient for the labels to
-            # be the true components (each label is a member of its own
-            # group, so distinct groups cannot share one). The labels
-            # are checkpointed once and RETURNED on success, so the
-            # caller's action reuses the confirm pass's materialization
-            # instead of recomputing _labels from scratch (r14).
-            lab = _labels(e).localCheckpoint(eager=True)
-            la = lab.select(
-                F.col("id").alias("a"), F.col("component").alias("_ca")
-            )
-            lb = lab.select(
-                F.col("id").alias("b"), F.col("component").alias("_cb")
-            )
-            bad = (
-                e0.join(la, "a")
-                .join(lb, "b")
-                .where(F.col("_ca") != F.col("_cb"))
-                .limit(1)
-                .count()
-            )
-            if bad == 0:
-                converged = True
-                final_lab = lab
-                break
-        sig = new_sig
-    if stats is not None:
-        stats["rounds"] = rounds
-    if not converged:
-        # The fixpoint may land exactly on the FINAL round (every
-        # in-loop signature compare saw a change). One exact
-        # label-consistency probe distinguishes "converged,
-        # unconfirmed" from genuinely unfinished - without it a correct
-        # result would raise (the r4 implementation had the same
-        # rescue).
+    def _confirmed_labels(e: DataFrame) -> DataFrame | None:
+        # Exact convergence check: every ORIGINAL edge must connect
+        # same-labeled nodes, which is necessary and sufficient for the
+        # labels to be the true components (each label is a member of
+        # its own group, so distinct groups cannot share one). The
+        # labels are checkpointed once and RETURNED on success, so the
+        # caller's action reuses this materialization instead of
+        # recomputing _labels from scratch (r14).
         lab = _labels(e).localCheckpoint(eager=True)
         la = lab.select(
             F.col("id").alias("a"), F.col("component").alias("_ca")
@@ -248,10 +302,43 @@ def connected_components(
             .limit(1)
             .count()
         )
-        if bad == 0:
-            converged = True
-            final_lab = lab
-    if not converged:
+        return lab if bad == 0 else None
+
+    e = e0
+    sig = _sig(e)
+    final_lab = None
+    rounds = 0
+    for _ in range(max_iter):
+        rounds += 1
+        # No repartition before the checkpoint: the phase's trailing
+        # distinct already hash-partitioned on (a, b), and the next
+        # round's window re-shuffles on a regardless — an extra
+        # repartition(a) here is a pure wasted exchange per round.
+        # inner large phase skips its distinct (see _star_phase dedup
+        # note): 3 exchanges per round instead of 4, identical fixpoint
+        e = _star_phase(
+            _star_phase(e, "large", dedup=False), "small"
+        ).localCheckpoint(eager=True)
+        new_sig = _sig(e)
+        # signature stability is probabilistic (64-bit xor): confirm
+        if new_sig == sig:
+            final_lab = _confirmed_labels(e)
+            if final_lab is not None:
+                break
+        sig = new_sig
+    if stats is not None:
+        # a count of the checkpoint, not an Observation: an empty input
+        # runs no task, and an observation without a task has no value
+        stats.update(path="distributed", edges=ck.count(), rounds=rounds)
+    if final_lab is None:
+        # The fixpoint may land exactly on the FINAL round (every
+        # in-loop signature compare saw a change). One exact
+        # label-consistency probe distinguishes "converged,
+        # unconfirmed" from genuinely unfinished - without it a correct
+        # result would raise (the r4 implementation had the same
+        # rescue).
+        final_lab = _confirmed_labels(e)
+    if final_lab is None:
         msg = (
             f"connected_components did not converge within max_iter="
             f"{max_iter} star rounds (O(log n) rounds suffice, so this "
@@ -278,22 +365,6 @@ def dedup_components(
     return connected_components(pairs, id_a, id_b).select(
         F.col("id").alias("doc_id"), F.col("component")
     )
-
-
-def _driver_edge_budget(spark) -> int:
-    """Most aggregated edges pagerank collects to the driver, or -1
-    when the driver path is off.
-
-    Derived from spark.sql.autoBroadcastJoinThreshold, which already
-    means "small enough to hold on the driver and every executor"; an
-    edge row (two ids + a double weight) is charged 64 bytes, a
-    generous bound on its Arrow footprint. A negative threshold (-1:
-    no broadcasts) keeps every graph on the distributed path."""
-    raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    if raw.strip().startswith("-"):
-        return -1
-    # capped so the probe's limit(budget + 1) stays a valid int
-    return min(_size_conf_bytes(raw, default=10 << 20) // 64, (1 << 31) - 2)
 
 
 def _pagerank_local(spark, tbl, id_type, *, damping, n_iter, undirected):

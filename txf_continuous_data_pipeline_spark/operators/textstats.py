@@ -2330,8 +2330,10 @@ def bm25_topk_from_index(
     buckets at scale."""
     import os
 
-    postings = spark.read.parquet(os.path.join(path, "postings"))
-    dl = spark.read.parquet(os.path.join(path, "dl"))
+    from ..sources.io import read_parquet
+
+    postings = read_parquet(spark, os.path.join(path, "postings"))
+    dl = read_parquet(spark, os.path.join(path, "dl"))
     return _bm25_score_tail(
         postings, dl, queries,
         k=k, k1=k1, b=b, id_col=id_col, q_id=q_id, q_text=q_text,

@@ -253,9 +253,11 @@ def _neardup_components(spark, sf_dir, threshold=0.02):
         pairs = _shared_pairs(spark, sf_dir).where(
             F.col("jaccard_exact") >= threshold
         )
+        # already materialized: a local relation on the driver path,
+        # the confirm pass's checkpointed labels on the distributed one
         _COMPONENTS_CACHE[key] = connected_components(
             pairs, "id_a", "id_b"
-        ).localCheckpoint(eager=True)
+        )
     return _COMPONENTS_CACHE[key]
 
 

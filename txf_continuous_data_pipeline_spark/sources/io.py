@@ -5,11 +5,15 @@ Google-Sheet scans (config main.py:174-176, watermark main.py:411-435);
 its sink is an append to a sheet tab (main.py:478-510). Here the same
 roles are played by parquet tables:
 
-  S1  scan            -> spark.read.parquet (columnar, predicate pushdown)
+  S1  scan            -> parquet read (columnar, predicate pushdown), its
+                         schema from one driver-side footer read instead
+                         of Spark's inference job (read_parquet)
   S3  config scan     -> small dimension read; callers broadcast it
-  S4  watermark read  -> max(ts) aggregate (parquet footer stats make this
-                         near-free; strictly more correct than the
-                         reference's last-row read, main.py:428-429)
+  S4  watermark read  -> max(ts) aggregate over the sink (a scan of the
+                         ts column: v1 parquet pushes no aggregate down
+                         to footer statistics; strictly more correct
+                         than the reference's last-row read,
+                         main.py:428-429)
   S5  append sink     -> mode("append").parquet with a watermark filter in
                          front for idempotency (Gate 2, main.py:548-558)
 """
@@ -17,9 +21,11 @@ roles are played by parquet tables:
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_json_string
 
 TABLES = (
     "region",
@@ -35,23 +41,78 @@ TABLES = (
 )
 
 
-_NS_COLS_CACHE: dict[str, list[str]] = {}
+# A top-level TIMESTAMP(NANOS) column in parquet-mr's schema text.
+_NANOS_FIELD = re.compile(
+    r"^  \w+ int64 (.+) \(TIMESTAMP\(NANOS,(?:true|false)\)\)(?: = \d+)?;$",
+    re.M,
+)
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark 4 refuses
-    to read natively (PARQUET_TYPE_ILLEGAL)."""
-    if path not in _NS_COLS_CACHE:
-        import pyarrow.parquet as pq
-        import pyarrow.types as pt
+def _parquet_footer(spark: SparkSession, path: str):
+    """(schema, nanos_cols) of the parquet data at `path` from ONE
+    driver-side footer read, or None when the path holds no data file.
 
-        schema = pq.read_schema(path)
-        _NS_COLS_CACHE[path] = [
-            f.name
-            for f in schema
-            if pt.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    return _NS_COLS_CACHE[path]
+    Reads the footer of the first visible data file in name order (for
+    a directory, descending into partition subdirectories) - the file
+    Spark's own inference reads when mergeSchema is off - and converts
+    it with Spark's footer converter under the session's SQL conf, so
+    the schema equals spark.read.parquet(path).schema. Inference costs
+    a Spark job per read; this costs a handful of gateway calls.
+    nanos_cols lists the top-level TIMESTAMP(NANOS) columns, which
+    Spark 4 refuses to read natively (PARQUET_TYPE_ILLEGAL); schema is
+    None when there are any. Nothing is cached: a file rewritten in
+    place is read afresh."""
+    jvm = spark.sparkContext._jvm
+    jss = spark._jsparkSession
+    hconf = jss.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(hconf)
+    found = fs.globStatus(hpath(path))
+    while found:
+        status = found[0]
+        if not status.isDirectory():
+            break
+        # names Spark's file index skips: _SUCCESS, _temporary, .crc
+        found = fs.globStatus(hpath(status.getPath(), "[!_.]*"))
+    else:
+        return None
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    meta = pq.ParquetFooterReader.readFooter(
+        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, hconf
+        ),
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS,
+    )
+    ns_cols = _NANOS_FIELD.findall(
+        meta.getFileMetaData().getSchema().toString()
+    )
+    if ns_cols:
+        return None, ns_cols
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), meta),
+        pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+    )
+    return _parse_datatype_json_string(schema.json()), ns_cols
+
+
+def _scan(spark: SparkSession, path: str, footer) -> DataFrame:
+    """spark.read.parquet(path) with the footer's schema when there is
+    one. Without it (no data file, so Spark raises its usual error; or
+    nanos columns, which only the inference path's legacy
+    nanos-as-long mode reads) Spark infers the schema itself."""
+    if footer is None or footer[0] is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(footer[0]).parquet(path)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path) without Spark's schema-inference job:
+    the schema comes from one driver-side footer read
+    (_parquet_footer). For parquet directories whose files all share
+    one schema - what every engine sink and index writes; a read that
+    needs mergeSchema goes through spark.read directly."""
+    return _scan(spark, path, _parquet_footer(spark, path))
 
 
 def timestamp_flavors(sf_dir: str) -> dict[str, str]:
@@ -115,9 +176,10 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     column; native-micros tables keep full pushdown.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
+    footer = _parquet_footer(spark, path)
+    ns_cols = footer[1] if footer else []
     if not ns_cols:
-        return _normalize_timestamps(spark.read.parquet(path))
+        return _normalize_timestamps(_scan(spark, path, footer))
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in ns_cols:
@@ -220,11 +282,13 @@ def sink_watermark(spark: SparkSession, sink_path: str, ts_col: str = "ts"):
     """S4: the sink's high-watermark, or None for an empty/missing sink.
 
     Reference: get_last_timestamp (main.py:411-435) re-reads the WHOLE
-    sheet and takes the last row. Here: one max() aggregate answered from
-    parquet footer statistics.
+    sheet and takes the last row. Here: one max() aggregate, which scans
+    the ts column of every sink file (the v1 parquet source pushes no
+    aggregate down to footer statistics); only the schema comes from a
+    footer.
     """
     try:
-        df = spark.read.parquet(sink_path)
+        df = read_parquet(spark, sink_path)
     except Exception:
         return None
     row = df.agg(F.max(ts_col).alias("wm")).collect()[0]

@@ -54,6 +54,7 @@ from .commit_log import (  # noqa: F401  (re-exported for tests)
     run_available_now as _run_available_now,
     write_batch as _write_batch,
 )
+from ..sources.io import read_parquet
 
 EVENTS_SCHEMA = StructType(
     [
@@ -208,7 +209,7 @@ def gated_idempotent_sink(
                 # (min/max row-group stats), so the dedup read stays
                 # O(batch) however large the sink grows.
                 existing = (
-                    spark.read.parquet(sink_path)
+                    read_parquet(spark, sink_path)
                     .where(F.col(ts_col).between(lo, hi))
                     .select(ts_col)
                 )
