@@ -9,15 +9,19 @@ sf0.1 documents (the span_scale_probe discipline; nothing is written to
              the baseline's duplication density. Claim: suffix
              positions, sort mass, and duplicated-position counts all
              grow ~linearly; wall ~linearly once past scheduler
-             overhead - the plan is ONE distributed range-sort plus a
-             neighbor equi-join, nothing pairwise.
+             overhead - the plan (operators/dedup.suffix_block_frames)
+             is one range-sort of fixed-width suffix chunks per
+             refinement level, O(log max doc length) levels, with
+             neighbor LCPs read from split-time boundary records;
+             nothing pairwise.
 * "dupheavy" replicas carry IDENTICAL text under fresh ids: every
              position becomes maximally duplicated (a crawl of
              mirrored pages - the adversarial case for anything
-             pair-enumerating). Claim: still ~linear, because the
-             suffix-array neighbor walk touches each position exactly
-             twice regardless of how duplicated the corpus is; there
-             is no candidate-pair explosion to measure.
+             pair-enumerating). Claim: still ~linear, because each
+             position enters each refinement level at most once and
+             identical-suffix groups resolve as one block regardless
+             of how duplicated the corpus is; there is no
+             candidate-pair explosion to measure.
 
 For each corpus: docs, positions, duplicated positions (>= 8 tokens),
 max run, and the report wall seconds.

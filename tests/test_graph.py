@@ -490,10 +490,13 @@ def test_incremental_components_fold_equals_batch(spark, sf_dir, gate_path):
     #   batch 2: node 5 attaches to 21 -> the whole merged component
     #            relabels to 5; new singleton pair {40,41}; an edge
     #            INSIDE an existing component (10-12, must be a no-op)
+    #   batch 3: new node 42 joins {40,41}; its edge to NULL is dropped
+    #            as in batch connected_components (no (NULL, NULL) row)
     batches = [
         [(10, 11), (11, 12), (20, 21)],
         [(11, 20), (30, 31)],
         [(5, 21), (40, 41), (10, 12)],
+        [(41, 42), (42, None)],
     ]
     labels = spark.createDataFrame([], "id long, component long")
     for rows in batches:
@@ -512,6 +515,7 @@ def test_incremental_components_fold_equals_batch(spark, sf_dir, gate_path):
     # carries label 5
     comp5 = {i for i, c in got if c == 5}
     assert comp5 == {5, 10, 11, 12, 20, 21}
+    assert {i for i, c in got if c == 40} == {40, 41, 42}
 
 
 def test_incremental_components_fold_on_corpus_pairs(spark, sf_dir):

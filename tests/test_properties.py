@@ -601,18 +601,106 @@ def _py_suffix_dup_lengths(toks: dict) -> dict:
     return want
 
 
+def _py_eval_overlap(train_toks: dict, eval_toks: dict) -> dict:
+    """Brute-force pure-Python eval-overlap oracle: per train position,
+    the longest run matching ANY eval position verbatim. Quadratic, so
+    only for the small hand-built and random corpora."""
+    want = {}
+    for d, ws in train_toks.items():
+        for i in range(len(ws)):
+            best = 0
+            for ews in eval_toks.values():
+                for j in range(len(ews)):
+                    l = 0
+                    for x, y in zip(ws[i:], ews[j:]):
+                        if x != y:
+                            break
+                        l += 1
+                    best = max(best, l)
+            want[(d, i)] = best
+    return want
+
+
+def _py_merged_eval_overlap(train_toks: dict, eval_toks: dict) -> dict:
+    """Merged-suffix-array pure-Python eval-overlap oracle for corpus-
+    sized inputs: sort train and eval suffixes together; a train
+    suffix's longest verbatim match with the eval side is its LCP with
+    the nearest eval suffix in either direction of the merged order."""
+    suf = []
+    for side, toks in ((0, train_toks), (1, eval_toks)):
+        for d, ws in toks.items():
+            for i in range(len(ws)):
+                suf.append((tuple(ws[i:]), side, d, i))
+    suf.sort()
+
+    def lcp(a, b):
+        m = 0
+        for x, y in zip(a, b):
+            if x != y:
+                break
+            m += 1
+        return m
+
+    pe, ne = [None] * len(suf), [None] * len(suf)
+    last = None
+    for i, s in enumerate(suf):
+        pe[i] = last
+        if s[1] == 1:
+            last = i
+    nxt = None
+    for i in range(len(suf) - 1, -1, -1):
+        ne[i] = nxt
+        if suf[i][1] == 1:
+            nxt = i
+    want = {}
+    for i, s in enumerate(suf):
+        if s[1] == 1:
+            continue
+        best = 0
+        for j in (pe[i], ne[i]):
+            if j is not None:
+                best = max(best, lcp(s[0], suf[j][0]))
+        want[(s[2], s[3])] = best
+    return want
+
+
+def _suffix_block_derivations(df, side):
+    """(dup_len, eval_len) dicts keyed (doc_id, pos) from ONE
+    side-tagged suffix_block_frames call feeding both derivations."""
+    from txf_continuous_data_pipeline_spark.operators.dedup import (
+        suffix_block_frames,
+        suffix_dup_lengths_from_blocks,
+        suffix_eval_overlap_from_blocks,
+    )
+
+    frames = suffix_block_frames(
+        df, id_col="doc_id", text_col="text", side=side
+    )
+    lens = {
+        (r["doc_id"], r["pos"]): r["dup_len"]
+        for r in suffix_dup_lengths_from_blocks(
+            frames, id_col="doc_id"
+        ).collect()
+    }
+    ov = {
+        (r["doc_id"], r["pos"]): r["eval_len"]
+        for r in suffix_eval_overlap_from_blocks(
+            frames, id_col="doc_id"
+        ).collect()
+    }
+    return lens, ov
+
+
 def test_suffix_dup_lengths_matches_pure_python_suffix_array(
     spark, sf_dir
 ):
     """r11 verdict #4: the exact-substring grain. Per token position,
     the operator's longest-duplicated-run length must equal the value
     read off a pure-Python suffix array (sorted suffix tuples +
-    neighbor LCP max) over the same corpus - for BOTH strategies (the
-    one-sort bounded-doc plan and the prefix-doubling unbounded-doc
-    twin), which must also be row-identical to each other. Also pins
-    the doubling path's document-length guard."""
+    neighbor LCP max) over the same corpus. A 40-token document of
+    unique tokens reports 0 everywhere: there is no document-length
+    cap."""
     import duckdb
-    import pytest as _pytest
 
     from txf_continuous_data_pipeline_spark.operators.dedup import (
         suffix_dup_lengths,
@@ -620,15 +708,10 @@ def test_suffix_dup_lengths_matches_pure_python_suffix_array(
     from txf_continuous_data_pipeline_spark.sources import read_table
 
     docs = read_table(spark, sf_dir, "documents")
-    got_sort = {
+    got = {
         (r["doc_id"], r["pos"]): r["dup_len"]
-        for r in suffix_dup_lengths(docs, strategy="sort").collect()
+        for r in suffix_dup_lengths(docs).collect()
     }
-    got_dbl = {
-        (r["doc_id"], r["pos"]): r["dup_len"]
-        for r in suffix_dup_lengths(docs, strategy="doubling").collect()
-    }
-    assert got_sort == got_dbl and got_sort
 
     con = duckdb.connect()
     rows = con.execute(
@@ -636,16 +719,12 @@ def test_suffix_dup_lengths_matches_pure_python_suffix_array(
         f"FROM read_parquet('{sf_dir}/documents.parquet')"
     ).fetchall()
     toks = {d: [w for w in (t or "").split() if w] for d, t in rows}
-    assert got_sort == _py_suffix_dup_lengths(toks)
+    assert got == _py_suffix_dup_lengths(toks) and got
 
-    # doubling refuses documents longer than its 2^n_rounds cap
     long_doc = spark.createDataFrame(
         [(1, " ".join(f"w{i}" for i in range(40)))], "doc_id long, text string"
     )
-    with _pytest.raises(ValueError, match="exceeds"):
-        suffix_dup_lengths(long_doc, strategy="doubling", n_rounds=5)
-    # ... and the sort strategy has no cap
-    out = suffix_dup_lengths(long_doc, strategy="sort").collect()
+    out = suffix_dup_lengths(long_doc).collect()
     assert len(out) == 40 and all(r["dup_len"] == 0 for r in out)
 
 
@@ -734,43 +813,7 @@ def test_suffix_eval_overlap_matches_pure_python(spark, sf_dir):
     for d, src, t in rows:
         toks = [w for w in (t or "").split() if w]
         (evd if src == "src0" else tr)[d] = toks
-    suf = []
-    for d, toks in tr.items():
-        for i in range(len(toks)):
-            suf.append((tuple(toks[i:]), 0, d, i))
-    for d, toks in evd.items():
-        for i in range(len(toks)):
-            suf.append((tuple(toks[i:]), 1, d, i))
-    suf.sort()
-
-    def lcp(a, b):
-        m = 0
-        for x, y in zip(a, b):
-            if x != y:
-                break
-            m += 1
-        return m
-
-    pe, ne = [None] * len(suf), [None] * len(suf)
-    last = None
-    for i, s in enumerate(suf):
-        pe[i] = last
-        if s[1] == 1:
-            last = i
-    nxt = None
-    for i in range(len(suf) - 1, -1, -1):
-        ne[i] = nxt
-        if suf[i][1] == 1:
-            nxt = i
-    want = {}
-    for i, s in enumerate(suf):
-        if s[1] == 1:
-            continue
-        best = 0
-        for j in (pe[i], ne[i]):
-            if j is not None:
-                best = max(best, lcp(s[0], suf[j][0]))
-        want[(s[2], s[3])] = best
+    want = _py_merged_eval_overlap(tr, evd)
     assert got == want and want
     assert max(got.values()) < max(
         len(t) for t in tr.values()
@@ -778,26 +821,18 @@ def test_suffix_eval_overlap_matches_pure_python(spark, sf_dir):
 
 
 def test_shared_suffix_frame_serves_both_derivations(spark, sf_dir):
-    """r12 verdict #3 pin: ONE merged side-tagged suffix sort serves
-    the whole family. (a) dup_len derived from the side-tagged merged
-    frame (eval rows included, _side in the tie-break keys) is
-    row-identical to the standalone train-only-keyed sort - the
-    tie-insensitivity claim, since tie blocks carry identical slices;
-    (b) the eval-overlap derivation off the SAME frame matches the
-    standalone suffix_eval_overlap; (c) the query-layer cache returns
-    the same frame object across consumers, so a session pays the
-    sort once per corpus."""
+    """r12 verdict #3 pin: ONE merged side-tagged suffix ordering
+    serves the whole family. (a) dup_len derived from the side-tagged
+    suffix_block_frames (eval rows included, duplication is
+    corpus-wide) equals the pure-Python suffix array over ALL
+    documents; (b) the eval-overlap derivation off the SAME frames
+    equals the pure-Python merged suffix array of train vs eval
+    (source 'src0'); (c) the query-layer cache returns the same
+    frames object across consumers, so a session pays the ordering
+    once per corpus."""
+    import duckdb
     from pyspark.sql import functions as F
 
-    from txf_continuous_data_pipeline_spark.operators.dedup import (
-        _suffix_positions,
-        _suffix_slice_frames,
-        suffix_dup_lengths,
-        suffix_dup_lengths_from_frame,
-        suffix_eval_overlap,
-        suffix_eval_overlap_from_frame,
-        suffix_sorted_frame,
-    )
     from txf_continuous_data_pipeline_spark.queries.text_dedup import (
         _cached_suffix_frame,
     )
@@ -805,37 +840,20 @@ def test_shared_suffix_frame_serves_both_derivations(spark, sf_dir):
 
     docs = read_table(spark, sf_dir, "documents")
     side = F.when(F.col("source") == "src0", F.lit(1)).otherwise(F.lit(0))
-    base, sfx = _suffix_slice_frames(
-        docs, id_col="doc_id", text_col="text", side=side
-    )
-    sidf = suffix_sorted_frame(sfx, id_col="doc_id")
+    got_lens, got_ov = _suffix_block_derivations(docs, side)
 
-    got_lens = {
-        (r["doc_id"], r["pos"]): r["dup_len"]
-        for r in suffix_dup_lengths_from_frame(
-            sidf, base, id_col="doc_id"
-        ).collect()
-    }
-    want_lens = {
-        (r["doc_id"], r["pos"]): r["dup_len"]
-        for r in suffix_dup_lengths(docs, strategy="sort").collect()
-    }
-    assert got_lens == want_lens and got_lens
-
-    train = docs.where(F.col("source") != "src0")
-    ev = docs.where(F.col("source") == "src0")
-    tbase = _suffix_positions(train, id_col="doc_id", text_col="text")
-    got_ov = {
-        (r["doc_id"], r["pos"]): r["eval_len"]
-        for r in suffix_eval_overlap_from_frame(
-            sidf, tbase, id_col="doc_id"
-        ).collect()
-    }
-    want_ov = {
-        (r["doc_id"], r["pos"]): r["eval_len"]
-        for r in suffix_eval_overlap(train, ev).collect()
-    }
-    assert got_ov == want_ov and got_ov
+    con = duckdb.connect()
+    rows = con.execute(
+        f"SELECT doc_id, source, lower(trim(text)) "
+        f"FROM read_parquet('{sf_dir}/documents.parquet')"
+    ).fetchall()
+    tr, evd = {}, {}
+    for d, src, t in rows:
+        (evd if src == "src0" else tr)[d] = [
+            w for w in (t or "").split() if w
+        ]
+    assert got_lens == _py_suffix_dup_lengths({**tr, **evd}) and got_lens
+    assert got_ov == _py_merged_eval_overlap(tr, evd) and got_ov
 
     assert _cached_suffix_frame(spark, sf_dir) is _cached_suffix_frame(
         spark, sf_dir
@@ -844,43 +862,20 @@ def test_shared_suffix_frame_serves_both_derivations(spark, sf_dir):
 
 def test_suffix_family_degenerate_corpora(spark):
     """Crash-freedom + exact semantics of the shared suffix builders on
-    degenerate inputs: empty corpus (empty partition-offset frame),
-    single doc (self-overlap only), single token, eval-only / train-only
-    sides, and whitespace-only docs (dropped by the size>0 guard)."""
+    degenerate inputs: empty corpus (no partitions to scan), single doc
+    (self-overlap only), single token, eval-only / train-only sides,
+    and whitespace-only docs (dropped by the size>0 guard)."""
     from pyspark.sql import functions as F
-
-    from txf_continuous_data_pipeline_spark.operators.dedup import (
-        _suffix_positions,
-        _suffix_slice_frames,
-        suffix_dup_lengths_from_frame,
-        suffix_eval_overlap_from_frame,
-        suffix_sorted_frame,
-    )
 
     def run(rows):
         df = spark.createDataFrame(
             rows, "doc_id long, text string, s int"
         )
-        base, sfx = _suffix_slice_frames(
-            df, id_col="doc_id", text_col="text", side=F.col("s")
+        lens, ov = _suffix_block_derivations(df, F.col("s"))
+        return (
+            sorted((d, p, v) for (d, p), v in lens.items()),
+            sorted((d, p, v) for (d, p), v in ov.items()),
         )
-        sidf = suffix_sorted_frame(sfx, id_col="doc_id")
-        lens = sorted(
-            (r["doc_id"], r["pos"], r["dup_len"])
-            for r in suffix_dup_lengths_from_frame(
-                sidf, base, id_col="doc_id"
-            ).collect()
-        )
-        tbase = _suffix_positions(
-            df.where(F.col("s") == 0), id_col="doc_id", text_col="text"
-        )
-        ov = sorted(
-            (r["doc_id"], r["pos"], r["eval_len"])
-            for r in suffix_eval_overlap_from_frame(
-                sidf, tbase, id_col="doc_id"
-            ).collect()
-        )
-        return lens, ov
 
     assert run([]) == ([], [])
     # "a b a b": suffixes at 0 and 2 share "a b" (LCP 2); 1 and 3 share "b"
@@ -904,37 +899,17 @@ def test_suffix_family_degenerate_corpora(spark):
 
 def test_suffix_family_adversarial_shapes(spark):
     """Adversarial corpus shapes through the shared builders, each
-    against an inline pure-Python suffix-array differential: all-equal
-    tokens (maximal tie blocks - the shape that would expose any
-    tie-break sensitivity), nested repeats, an eval doc VERBATIM equal
-    to a train doc (full-length contamination), and an eval doc that
-    is a proper substring of a train doc."""
+    against the pure-Python suffix-array and brute-force eval-overlap
+    oracles: all-equal tokens (maximal tie blocks - the shape that
+    would expose any tie-break sensitivity), nested repeats, an eval
+    doc VERBATIM equal to a train doc (full-length contamination), an
+    eval doc that is a proper substring of a train doc, and two
+    deep-refinement corpora whose duplicated runs (149 and 100
+    tokens) outlast the first chunk widths, so the chunked ordering
+    must refine tied runs past level 2."""
     from pyspark.sql import functions as F
 
-    from txf_continuous_data_pipeline_spark.operators.dedup import (
-        _suffix_positions,
-        _suffix_slice_frames,
-        suffix_dup_lengths_from_frame,
-        suffix_eval_overlap_from_frame,
-        suffix_sorted_frame,
-    )
-
-    def py_eval_overlap(train_toks, eval_toks):
-        want = {}
-        for d, ws in train_toks.items():
-            for i in range(len(ws)):
-                best = 0
-                for ews in eval_toks.values():
-                    for j in range(len(ews)):
-                        l = 0
-                        for x, y in zip(ws[i:], ews[j:]):
-                            if x != y:
-                                break
-                            l += 1
-                        best = max(best, l)
-                want[(d, i)] = best
-        return want
-
+    shared = " ".join(f"t{i}" for i in range(100))
     corpora = [
         # all-equal tokens: every suffix of every doc ties maximally
         {1: "z z z z z", 2: "z z z", 3: "z"},
@@ -944,6 +919,12 @@ def test_suffix_family_adversarial_shapes(spark):
         {1: "p q r s", 2: "x y", 9: "p q r s"},
         # eval (doc 9) is a proper substring of train doc 1
         {1: "m n o p q", 9: "n o p"},
+        # long all-equal docs: a 149-token self-duplicated run
+        {1: " ".join(["z"] * 150), 2: " ".join(["z"] * 70),
+         9: " ".join(["z"] * 20)},
+        # two docs sharing a 100-token prefix; eval quotes 65 tokens
+        {1: shared + " end1", 2: shared + " end2",
+         9: "q0 " + " ".join(f"t{i}" for i in range(20, 85)) + " q1"},
     ]
     for toks_map in corpora:
         rows = [
@@ -952,31 +933,16 @@ def test_suffix_family_adversarial_shapes(spark):
         df = spark.createDataFrame(
             rows, "doc_id long, text string, s int"
         )
-        base, sfx = _suffix_slice_frames(
-            df, id_col="doc_id", text_col="text", side=F.col("s")
-        )
-        sidf = suffix_sorted_frame(sfx, id_col="doc_id")
-        got = {
-            (r["doc_id"], r["pos"]): r["dup_len"]
-            for r in suffix_dup_lengths_from_frame(
-                sidf, base, id_col="doc_id"
-            ).collect()
-        }
+        got, got_ov = _suffix_block_derivations(df, F.col("s"))
         toks = {d: t.split() for d, t in toks_map.items()}
-        assert got == _py_suffix_dup_lengths(toks), toks_map
+        want = _py_suffix_dup_lengths(toks)
+        assert got == want, toks_map
 
         train_toks = {d: w for d, w in toks.items() if d < 9}
         eval_toks = {d: w for d, w in toks.items() if d >= 9}
-        tbase = _suffix_positions(
-            df.where(F.col("s") == 0), id_col="doc_id", text_col="text"
-        )
-        got_ov = {
-            (r["doc_id"], r["pos"]): r["eval_len"]
-            for r in suffix_eval_overlap_from_frame(
-                sidf, tbase, id_col="doc_id"
-            ).collect()
-        }
-        assert got_ov == py_eval_overlap(train_toks, eval_toks), toks_map
+        assert got_ov == _py_eval_overlap(train_toks, eval_toks), toks_map
+    # the last corpus really holds the 100-token run and 65-token quote
+    assert want[(1, 0)] == 100 and max(got_ov.values()) == 65
 
 
 def test_suffix_eval_overlap_disjoint_vocabularies(spark):
@@ -1048,7 +1014,7 @@ def test_suffix_family_unicode_tokens(spark):
     )
     got = {
         (r["doc_id"], r["pos"]): r["dup_len"]
-        for r in suffix_dup_lengths(df, strategy="sort").collect()
+        for r in suffix_dup_lengths(df).collect()
     }
     toks = {d: t.lower().split() for d, t in toks_map.items()}
     assert got == _py_suffix_dup_lengths(toks) and got
@@ -1069,22 +1035,6 @@ def test_suffix_family_random_differential(spark):
         suffix_dup_lengths,
         suffix_eval_overlap,
     )
-
-    def py_eval_overlap(train_toks, eval_toks):
-        want = {}
-        for d, ws in train_toks.items():
-            for i in range(len(ws)):
-                best = 0
-                for ews in eval_toks.values():
-                    for j in range(len(ews)):
-                        l = 0
-                        for x, y in zip(ws[i:], ews[j:]):
-                            if x != y:
-                                break
-                            l += 1
-                        best = max(best, l)
-                want[(d, i)] = best
-        return want
 
     train_tok = st.sampled_from(["aa", "bb", "cc"])
     eval_tok = st.sampled_from(["bb", "cc", "zz"])  # overlaps partially
@@ -1115,13 +1065,13 @@ def test_suffix_family_random_differential(spark):
         )
         got_dup = {
             (r["doc_id"], r["pos"]): r["dup_len"]
-            for r in suffix_dup_lengths(train, strategy="sort").collect()
+            for r in suffix_dup_lengths(train).collect()
         }
         assert got_dup == _py_suffix_dup_lengths(train_toks)
         got_ov = {
             (r["doc_id"], r["pos"]): r["eval_len"]
             for r in suffix_eval_overlap(train, ev).collect()
         }
-        assert got_ov == py_eval_overlap(train_toks, eval_toks)
+        assert got_ov == _py_eval_overlap(train_toks, eval_toks)
 
     run()

@@ -1303,82 +1303,12 @@ def minhash_contamination(
     )
 
 
-def _order_consistent_ranks(
-    pairs: DataFrame, key_cols: "list[str]", out_col: str = "_rank"
-) -> DataFrame:
-    """Assign every row an EQUALITY-CONSISTENT, ORDER-CONSISTENT rank
-    over `key_cols` without a global single-task window: range-sort
-    the frame (distributed sort), stamp monotonically_increasing_id
-    (partition index in the high bits, so ids follow the range order),
-    and take min(id) per distinct key - equal keys share a rank,
-    smaller keys get smaller ranks. Values are arbitrary longs, never
-    dense; every consumer uses them only for equality and order, both
-    of which are deterministic even though the raw ids depend on
-    partition boundaries (min over a sorted group is boundary-free
-    only in the sense consumers need: key1 < key2 => rank1 < rank2).
-    The suffix-rank doubling below localCheckpoints each round, so the
-    nondeterministic raw ids are pinned before reuse."""
-    sorted_ = pairs.repartitionByRange(*key_cols).sortWithinPartitions(
-        *key_cols
-    )
-    with_id = sorted_.withColumn("_mid", F.monotonically_increasing_id())
-    ranks = with_id.groupBy(*key_cols).agg(F.min("_mid").alias(out_col))
-    return with_id.join(ranks, key_cols).drop("_mid")
-
-
-def _two_pass_ranks(
-    df: DataFrame, keys: "list[str]", *, rank_col: str
-) -> "tuple[DataFrame, int]":
-    """The dense-rank-without-a-global-window primitive the suffix
-    family shares (r13 review: the vocab ranking and the sid
-    assignment had hand-copied twins of this - the exact drift class
-    _order_consistent_ranks' docstring already warned about):
-    range-sort by `keys`, checkpoint BEFORE the two consumers (range
-    boundaries are sampled, so without the pin the counts collect and
-    the main job could partition differently and the offsets would
-    describe the wrong layout) - LAZILY, so the counts collect below
-    is the job that materializes it (one job, not two; r14), collect
-    per-partition counts (<= #partitions rows), then partition-local
-    row_number + broadcast offset. Returns (the checkpointed sorted
-    frame with `_pid` and the 0-based `rank_col` added, total row
-    count)."""
-    from pyspark.sql import Window
-
-    sorted_ = (
-        df.repartitionByRange(*keys)
-        .sortWithinPartitions(*keys)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=False)
-    )
-    counts = {
-        r["_pid"]: r["c"]
-        for r in sorted_.groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    offs, acc = [], 0
-    for pid in sorted(counts):
-        offs.append((pid, acc))
-        acc += counts[pid]
-    off_df = df.sparkSession.createDataFrame(offs, "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(*keys)
-    ranked = (
-        sorted_.withColumn("_lrn", F.row_number().over(w))
-        .join(F.broadcast(off_df), "_pid")
-        .withColumn(rank_col, F.col("_off") + F.col("_lrn") - 1)
-        .drop("_lrn", "_off")
-    )
-    return ranked, acc
-
-
 def _suffix_token_hashes(text_col: str) -> Column:
     """The family's ONE tokenize-and-hash expression (trim -> lower ->
     whitespace split -> drop empties -> salted h60 per token), shared
-    by the position-universe and slice builders so the two can never
-    drift (review finding: a tokenizer tweak applied to one verbatim
-    copy but not the other would silently desync the zero-filled
-    position universe from the suffix slices - the same
-    hand-copied-twin class _two_pass_ranks closed)."""
+    by suffix_block_frames and the broadcast eval index so merged and
+    probed LCPs can never drift (a tokenizer tweak applied to one
+    copy but not the other would silently desync them)."""
     toks_arr = F.filter(
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
         lambda t: t != "",
@@ -1388,162 +1318,12 @@ def _suffix_token_hashes(text_col: str) -> Column:
     )
 
 
-def _suffix_positions(
-    df: DataFrame, *, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, _h raw token-hash array) - the CHEAP position-universe
-    builder: consumers only read F.size(_h), so no dictionary work
-    runs here (r13 review: callers that need only the universe were
-    paying _suffix_slice_frames' eager vocabulary-ranking jobs for
-    frames they threw away)."""
-    return df.select(
-        F.col(id_col),
-        _suffix_token_hashes(text_col).alias("_h"),
-    ).where(F.size("_h") > 0)
-
-
-def _suffix_rank_docs(
-    df: DataFrame, *, id_col: str, text_col: str, side
-) -> DataFrame:
-    """(id, _side, _h array<int>) - documents as DENSE-RANK token
-    arrays: the shared dictionary stage of both suffix machineries
-    (the r13 slice sort and the r14 chunked refinement). Tokenizes via
-    the family's ONE expression (_suffix_token_hashes), then assigns
-    each DISTINCT token hash a dense int32 rank via the two-pass
-    assignment (vocabulary-sized - token TYPES, never corpus mass; the
-    vocab join is NOT broadcast-hinted - AQE broadcasts while it fits).
-    Ranks are 1-BASED so 0 stays free as a pad sentinel for fixed-width
-    chunk packing; LCP is alphabet-permutation-invariant, so any
-    injective token -> int map preserves every derived value.
-
-    Same preconditions as _suffix_slice_frames: (id, _side) pairs must
-    be unique, and frames that will be compared or merged must be
-    tagged and ranked in ONE call (per-side dictionaries assign
-    incompatible ranks - the r13 review finding)."""
-    side_col = side if isinstance(side, Column) else F.lit(side)
-    tagged = df.select(
-        F.col(id_col),
-        side_col.alias("_side"),
-        _suffix_token_hashes(text_col).alias("_h"),
-    ).where(F.size("_h") > 0)
-    ex = tagged.select(
-        id_col, "_side", F.posexplode("_h").alias("pos", "_th")
-    )
-    ranked_v, vtotal = _two_pass_ranks(
-        ex.select("_th").distinct(), ["_th"], rank_col="_r64"
-    )
-    if vtotal >= 1 << 31:
-        raise ValueError(
-            f"token vocabulary {vtotal} exceeds int32 rank space"
-        )
-    ranked = ranked_v.select(
-        "_th", (F.col("_r64") + 1).cast("int").alias("_r")
-    )
-    return (
-        ex.join(ranked, "_th")
-        .groupBy(id_col, "_side")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "_r"))),
-                lambda s: s["_r"],
-            ).alias("_h")
-        )
-    )
-
-
-def _suffix_slice_frames(
-    df: DataFrame, *, id_col: str, text_col: str, side
-) -> "tuple[DataFrame, DataFrame]":
-    """(base, sfx) for the suffix-sort family: base = (id, _h raw
-    token-hash array - the position universe), sfx = one row per
-    suffix carrying its slice plus a _side tag (0 = train/corpus,
-    1 = eval; an int or a per-row Column) - the tag is what lets ONE
-    merged sort serve both the dup-length and the eval-overlap
-    derivations (r12 verdict #3).
-
-    The suffix SLICES ride dense int32 token ranks instead of the
-    8-byte h60 hashes (r13): LCP is alphabet-permutation-invariant,
-    so ANY injective token -> int mapping preserves every derived
-    value while halving the slice sort's shuffle/checkpoint bytes.
-    The dictionary stages cost a FLAT ~2 s plus one linear token
-    join, repaid in slice bytes amplified ~L/2-fold: order-swapped
-    A/B (rows identical) measures ~7.5 vs ~6.0 s at sf0.1 (overhead
-    dominates a 5k-doc corpus - the conscious trade) and ~40 vs
-    ~50 s at a 10x staged corpus, the advantage growing with the
-    sort's share; at the 100-TB design point the sort IS the lane
-    and the ~2x byte ratio bounds the win. The rank is the shared
-    two-pass assignment over the DISTINCT token hashes
-    (vocabulary-sized - token TYPES, not corpus mass), never a
-    single-task window; the vocab join is NOT broadcast-hinted - AQE
-    broadcasts while it fits and falls back to a shuffle join at
-    web-scale vocabularies.
-
-    PRECONDITION: (id, _side) pairs must be UNIQUE across `df` — the
-    rank rebuild below groups by (id, _side) and would silently merge
-    duplicate rows into one interleaved pseudo-document (the pre-r13
-    per-row posexplode kept them independent). Every caller satisfies
-    it today (documents-table ids are unique; the merged train∪eval
-    frame tags the sides apart), so no per-call count-vs-distinct job
-    is spent; a new caller with repeatable ids must dropDuplicates or
-    salt first (ADVICE r13).
-
-    NOTE the dictionary build runs EAGERLY at call time (a checkpoint
-    + one collect) because every sfx consumer needs it pinned; a
-    caller that only needs the position universe must use
-    _suffix_positions instead. CRITICAL: ranks are only comparable
-    WITHIN one call's dictionary - frames that will be compared or
-    merged (train vs eval) must be tagged and sliced in ONE call,
-    never one call per side (r13 review finding, reproduced: per-side
-    dictionaries assign incompatible ranks and cross-side LCPs come
-    out wrong whenever the vocabularies differ)."""
-    base = df.select(
-        F.col(id_col), _suffix_token_hashes(text_col).alias("_h")
-    ).where(F.size("_h") > 0)
-    rebuilt = _suffix_rank_docs(
-        df, id_col=id_col, text_col=text_col, side=side
-    )
-    sfx = rebuilt.select(
-        id_col,
-        "_side",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_h")),
-                lambda i: F.slice(F.col("_h"), i, F.size("_h") - i + 1),
-            )
-        ).alias("pos", "_sfx"),
-    )
-    return base, sfx
-
-
-def suffix_sorted_frame(sfx: DataFrame, *, id_col: str) -> DataFrame:
-    """ONE global range-sort of suffix slices + the two-pass
-    partition-offset sid assignment (range-sort -> checkpoint ->
-    per-partition counts collected driver-side, a <=#partitions-row
-    collect -> partition-local row_number + broadcast offset; never a
-    global single-task window). Returns the checkpointed
-    (_side, id, pos, _sfx, _pid, sid) frame every suffix-grain
-    consumer derives from. Equal slices are ordered by (_side, id,
-    pos) within their tie block, but every derivation is tie-
-    insensitive: equal _sfx means the ENTIRE slices are equal, so any
-    tied representative yields the same LCP against its neighbors."""
-    ranked, _ = _two_pass_ranks(
-        sfx, ["_sfx", "_side", id_col, "pos"], rank_col="sid"
-    )
-    # checkpoint the sid frame too: the family reads it several times
-    # (dup pairs join on sid AND sid+1, the eval scan, the eval slice
-    # broadcasts), and each read would otherwise replay the window +
-    # offset join over the full slice mass
-    return ranked.select(
-        "_side", id_col, "pos", "_sfx", "_pid", "sid"
-    ).localCheckpoint(eager=True)
-
-
 def _suffix_run_geometry(blk, mat, lens, prev0_blk, prev0_ck):
     """Shared vectorized run detection for the chunked suffix scans:
     given a partition's sorted member rows (parent block ids, padded
     chunk matrix, chunk lengths) plus the previous partition's last
     key, returns (key_start bool array, lcp-vs-previous-row int
-    array). Pads with -1, which never equals a 1-based rank, so
+    array). Pads with -1, which never equals an h60 token hash, so
     length mismatches surface as the first unequal column."""
     import numpy as np
 
@@ -1586,24 +1366,28 @@ def _suffix_ck_matrix(cks, width_floor=1):
     return mat, lens
 
 
+# Level-1 chunk width of suffix_block_frames: every suffix enters the
+# first sort carrying only its first _SUFFIX_W token hashes; later
+# levels grow the width geometrically (8x per level, capped at 4096).
+_SUFFIX_W = 8
+
+
 def suffix_block_frames(
     df: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
     side=0,
-    w: int = 8,
-    docs_ranked: "DataFrame | None" = None,
 ) -> dict:
-    """Bounded-prefix (chunked) suffix ordering - the r13-verdict-#1
-    replacement for the full-slice sort. The slice sort materializes
-    every suffix as its whole rank slice (~L/2-fold amplification of
-    the token stream, the dominant shuffle of the family's 10x probe);
-    this machinery sorts FIXED-WIDTH chunks and refines only tied
-    runs, so no suffix slice ever enters a shuffle:
+    """Bounded-prefix (chunked) suffix ordering - the family's one
+    suffix-array construction. Instead of materializing every suffix
+    as its whole token slice (~L/2-fold amplification of the token
+    stream), this machinery sorts FIXED-WIDTH chunks and refines only
+    tied runs, so no suffix slice ever enters a shuffle:
 
-      level 1: every suffix carries only its first `w` ranks; ONE
-        range-sort of those member rows puts equal keys adjacent, and
+      level 1: every suffix carries only its first w = _SUFFIX_W
+        token hashes; ONE range-sort of those member rows puts equal
+        keys adjacent, and
         a partition-local Arrow scan (with a one-row-per-partition
         driver fix-up for runs/parents straddling partition bounds -
         the two-pass discipline) assigns each run of equal keys its
@@ -1623,7 +1407,7 @@ def suffix_block_frames(
         the level count is O(log max_doc_len) - 2-3 levels for a
         100-token corpus - and each level's mass is the surviving dup
         mass only. Survivors fetch their remainder once after level 1
-        (AQE-planned join against the rank docs) and carry a
+        (AQE-planned join against the token-hash docs) and carry a
         shrinking tail thereafter - clean corpora never pay it.
 
     Every adjacent pair of FINAL blocks diverged at exactly one
@@ -1637,40 +1421,48 @@ def suffix_block_frames(
     read the same scanned frame); no global window, no corpus-sized
     collect anywhere.
 
+    `side` tags every row: 0 = train/corpus, 1 = eval; an int or a
+    per-row Column. The tag is what lets ONE merged ordering serve
+    both the dup-length and the eval-overlap derivations.
+
+    PRECONDITIONS: `id_col` values must be UNIQUE across `df`, sides
+    included - the survivors' remainder fetch joins on the id alone,
+    so a repeated id would fan out into another document's tokens (a
+    caller with repeatable ids must dropDuplicates or salt first).
+    Frames whose suffixes will be compared (train vs eval) must be
+    side-tagged and ordered in ONE call: block ids are positions in
+    one call's order and mean nothing across calls.
+
     Returns {"blocks": (bid, _m, _he, tie_len, lcp_prev, lcp_next) -
     one row per distinct-suffix group, bid = global range start (a
     total order key), tie_len = member length for identical groups,
     lcp_prev/next = exact LCP with the neighboring group;
-    "members": (bid, id, pos, _side) - every suffix position;
-    "docs": the checkpointed rank docs}. Derivations:
-    suffix_dup_lengths_from_blocks / suffix_eval_overlap_from_blocks.
-    Same preconditions as _suffix_rank_docs (unique ids, one call for
-    frames that will be compared)."""
+    "members": (bid, id, pos, _side) - every suffix position}.
+    Derivations: suffix_dup_lengths_from_blocks /
+    suffix_eval_overlap_from_blocks."""
     import numpy as np  # noqa: F401 - workers import inside closures
     import pandas as pd  # noqa: F401
 
     spark = df.sparkSession
-    docs = docs_ranked
-    if docs is None:
-        # RAW h60 token hashes, no dictionary ranking: the r13
-        # int32-rank trade was justified by the ~L/2 SLICE
-        # amplification it halved; chunks amplify only w-fold, and
-        # the rank rebuild costs a corpus-wide explode+join+groupBy
-        # shuffle plus the vocab two-pass - more than the 4 extra
-        # bytes/rank it saves here. LCP is hash/permutation-invariant
-        # either way; -1 padding stays safe (h60 is non-negative).
-        side_col = side if isinstance(side, Column) else F.lit(side)
-        docs = df.select(
-            F.col(id_col),
-            side_col.alias("_side"),
-            _suffix_token_hashes(text_col).alias("_h"),
-        ).where(F.size("_h") > 0)
+    w = _SUFFIX_W
+    # RAW h60 token hashes, no dictionary ranking: chunks amplify the
+    # token stream only w-fold, so a dense-rank rebuild (a corpus-wide
+    # explode+join+groupBy shuffle plus a vocabulary ranking) would
+    # cost more than the 4 bytes/token it saves. LCP is
+    # hash/permutation-invariant; -1 padding stays safe (h60 is
+    # non-negative).
+    side_col = side if isinstance(side, Column) else F.lit(side)
+    docs = df.select(
+        F.col(id_col),
+        side_col.alias("_side"),
+        _suffix_token_hashes(text_col).alias("_h"),
+    ).where(F.size("_h") > 0)
     # lazy: the level-1 summary job below is what materializes it
     docs = docs.withColumn("_n", F.size("_h")).localCheckpoint(
         eager=False
     )
 
-    # level-1 candidates: the w-rank chunk is materialized inside the
+    # level-1 candidates: the w-hash chunk is materialized inside the
     # explode projection - the full slice never exists anywhere
     live = (
         docs.select(
@@ -2109,7 +1901,6 @@ def suffix_block_frames(
     return {
         "blocks": blocks.localCheckpoint(eager=False),
         "members": members.localCheckpoint(eager=False),
-        "docs": docs,
     }
 
 def suffix_dup_lengths_from_blocks(
@@ -2120,7 +1911,7 @@ def suffix_dup_lengths_from_blocks(
     of the two exact neighbor-group LCPs - no zero-fill join needed
     because every suffix position is a member of exactly one block.
     Side tags are ignored: duplication is corpus-wide, eval rows
-    included (the from_frame contract)."""
+    included."""
     val = F.when(F.col("_m") >= 2, F.col("tie_len")).otherwise(
         F.greatest(
             F.coalesce(F.col("lcp_prev"), F.lit(0)),
@@ -2312,312 +2103,44 @@ def suffix_eval_overlap_from_blocks(
     )
 
 
-def suffix_dup_lengths_from_frame(
-    sidf: DataFrame, base: DataFrame, *, id_col: str
-) -> DataFrame:
-    """(id, pos, dup_len) derived from a suffix_sorted_frame: one
-    sid/sid+1 equi-join whose two slice payloads feed the
-    first-mismatch LCP column expression, one per-position max over
-    both directions, zero-fill from `base`'s position universe. Side
-    tags are ignored - duplication is corpus-wide, eval rows
-    included."""
-    sid = sidf.select("sid", id_col, "pos", "_sfx")
-    b = sid.select(
-        (F.col("sid") - F.lit(1)).alias("sid"),
-        F.col(id_col).alias("_bdoc"),
-        F.col("pos").alias("_bpos"),
-        F.col("_sfx").alias("_bsfx"),
-    )
-    pairs = sid.join(b, "sid")
-    m = F.least(F.size("_sfx"), F.size("_bsfx"))
-    # F.get: NULL (not an error) when every compared element matches
-    first_bad = F.get(
-        F.filter(
-            F.sequence(F.lit(1), m),
-            lambda i: F.element_at(F.col("_sfx"), i)
-            != F.element_at(F.col("_bsfx"), i),
-        ),
-        0,
-    )
-    pairs = pairs.select(
-        F.col(id_col),
-        "pos",
-        F.col("_bdoc"),
-        F.col("_bpos"),
-        F.coalesce(first_bad - 1, m).alias("_lcp"),
-    )
-    both = pairs.select(id_col, "pos", "_lcp").unionByName(
-        pairs.select(
-            F.col("_bdoc").alias(id_col),
-            F.col("_bpos").alias("pos"),
-            "_lcp",
-        )
-    )
-    per_pos = both.groupBy(id_col, "pos").agg(
-        F.max("_lcp").alias("dup_len")
-    )
-    # posexplode indexes are already 0-based suffix starts
-    all_pos = base.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_h") - 1)).alias("pos"),
-    )
-    return all_pos.join(per_pos, [id_col, "pos"], "left").select(
-        id_col,
-        F.col("pos").cast("int").alias("pos"),
-        F.coalesce("dup_len", F.lit(0)).cast("long").alias("dup_len"),
-    )
-
-
-def _suffix_dup_lengths_sorted(
-    df: DataFrame, *, id_col: str, text_col: str
-) -> DataFrame:
-    """strategy='sort' body of suffix_dup_lengths: slice -> one global
-    range-sort with sid assignment -> neighbor-LCP derivation. Each
-    stage is a shared builder so report families can reuse the sorted
-    frame across consumers (queries/text_dedup._cached_suffix_frame)."""
-    base, sfx = _suffix_slice_frames(
-        df, id_col=id_col, text_col=text_col, side=0
-    )
-    sidf = suffix_sorted_frame(sfx, id_col=id_col)
-    return suffix_dup_lengths_from_frame(sidf, base, id_col=id_col)
-
-
 def suffix_dup_lengths(
     df: DataFrame,
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    strategy: str = "chunked",
-    n_rounds: int = 7,
 ) -> DataFrame:
     """Per token position, the length (in tokens) of the LONGEST
     substring starting there that occurs at least twice in the corpus
     - the exact-substring grain of Lee et al. 2022 (arXiv:2107.06499)
-    the 5-token span index approximates (r11 verdict #4). All three
-    strategies build the SUFFIX-ARRAY order over h60 token hashes (a
-    permuted alphabet - LCP is alphabet-order-invariant) and read
-    lrs(i) = max(LCP with the two suffix-array neighbors), which is
-    exact because the suffix sharing the longest prefix with S is
-    always adjacent to S in SA order; they differ in how the order is
-    built, trading memory amplification against sort rounds:
+    the 5-token span index approximates (r11 verdict #4). Builds the
+    SUFFIX-ARRAY order over h60 token hashes (a permuted alphabet -
+    LCP is alphabet-order-invariant) and reads lrs(i) = max(LCP with
+    the two suffix-array neighbors), which is exact because the suffix
+    sharing the longest prefix with S is always adjacent to S in SA
+    order.
 
-    strategy='chunked' (default since r14): bounded-prefix sort with
-    tie refinement (suffix_block_frames) - sorts w-rank chunks with
-    doubling widths instead of whole slices, collapses identical-
-    suffix groups up front, and derives every LCP from split-time
-    boundary records, so NO suffix slice ever enters a shuffle: the
-    ~L/2 slice amplification of 'sort' (the family's dominant 10x-
-    probe shuffle) drops to ~w per position plus the surviving dup
-    mass. O(log max_doc_len) levels; no document-length cap.
-
-    strategy='sort': materialize each suffix as its
-    token-hash slice and range-sort ONCE - arrays are natively
-    orderable, neighbors carry their slices, and LCP is a pure column
-    expression (first mismatching index), so the whole operator is
-    one distributed sort + one neighbor equi-join. The slice explode
-    amplifies the token stream by <= max_doc_len/2, which is the
-    RIGHT trade for bounded-length documents (this corpus caps near
-    100 tokens; amplification ~50x of a 4-byte dictionary-rank stream
-    since r13 - see _suffix_slice_frames), and the
-    plan has no per-round barrier.
-
-    strategy='doubling': the Manber-Myers path for UNBOUNDED document
-    lengths, where slice materialization would be quadratic:
-
-      1. prefix-doubling (Manber-Myers): rank_k orders every suffix by
-         its first 2^k tokens; rank_0 = h60(token) (a permuted
-         alphabet - LCP is alphabet-order-invariant, so hash order is
-         as good as lexicographic), rank_{k+1} = order-consistent rank
-         of the pair (rank_k(i), rank_k(i + 2^k)), sentinel -1 when
-         the offset falls off the document. n_rounds log-rounds of one
-         self-join + one distributed range-sort each - never a global
-         single-task window (_order_consistent_ranks).
-      2. suffix-array neighbors: consecutive ids along the final rank
-         order via RDD zipWithIndex after a range sort (the classic
-         two-pass count+offset, order-deterministic under the total
-         (rank, doc, pos) sort), then an equi-join of sid with sid+1.
-      3. LCP descent: for each neighbor pair walk k = K-1..0, adding
-         2^k and advancing both offsets whenever both windows fit
-         their documents and rank_k agrees - the standard rank-table
-         LCP, as n_rounds chained column-building joins.
-      4. lrs(i) = max(LCP with prev, LCP with next): the suffix with
-         the longest common prefix with suffix S is ALWAYS adjacent to
-         S in suffix-array order, so the per-position answer is exact,
-         not approximate.
+    The order is the bounded-prefix sort with tie refinement
+    (suffix_block_frames): it sorts fixed-width chunks with
+    geometrically growing widths instead of whole slices, collapses
+    identical-suffix groups up front, and derives every LCP from
+    split-time boundary records, so NO suffix slice ever enters a
+    shuffle - ~w hashes per position plus the surviving dup mass,
+    O(log max_doc_len) levels, no document-length cap.
 
     Suffixes never cross documents (each doc is its own sequence, the
     per-doc analogue of Lee et al.'s separator-joined concatenation).
-    Under 'doubling', documents longer than 2^n_rounds tokens would
-    leave distinct suffixes tied at the final round, so that path
-    RAISES if any doc exceeds the cap (one max aggregate) - raise
-    n_rounds for a longer corpus; rounds grow log(doc length), not
-    corpus size. 'sort' has no cap.
 
-    PRECONDITION: `id_col` values must be unique in `df` (duplicate
-    ids would merge into one interleaved pseudo-document in the
-    slice rebuild — see _suffix_slice_frames).
+    PRECONDITION: `id_col` values must be unique in `df` (see
+    suffix_block_frames).
 
     Returns (id_col, pos, dup_len): one row per token position,
-    dup_len = 0 when even the single token is unique. All strategies
-    are pinned row-identical to each other AND to a pure-Python
-    suffix array in tests/test_properties.py; report consumer
-    exact_substr_stats."""
-    if strategy == "chunked":
-        frames = suffix_block_frames(
-            df, id_col=id_col, text_col=text_col, side=0
-        )
-        return suffix_dup_lengths_from_blocks(frames, id_col=id_col)
-    if strategy == "sort":
-        return _suffix_dup_lengths_sorted(
-            df, id_col=id_col, text_col=text_col
-        )
-    if strategy != "doubling":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    toks = (
-        df.select(
-            F.col(id_col),
-            F.posexplode(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-            ).alias("pos", "_tok"),
-        )
-        .where(F.col("_tok") != "")
-        .select(
-            id_col, "pos", h60(F.concat(F.lit("S:"), F.col("_tok"))).alias("_rank")
-        )
+    dup_len = 0 when even the single token is unique. Pinned to a
+    pure-Python suffix array in tests/test_properties.py; report
+    consumer exact_substr_stats."""
+    frames = suffix_block_frames(
+        df, id_col=id_col, text_col=text_col, side=0
     )
-    nlen = toks.groupBy(id_col).agg(F.max("pos").alias("_maxp"))
-    cap = 1 << n_rounds
-    too_long = nlen.where(F.col("_maxp") + 1 > cap).limit(1).collect()
-    if too_long:
-        raise ValueError(
-            f"document {too_long[0][id_col]} exceeds 2^{n_rounds} tokens; "
-            "raise n_rounds"
-        )
-
-    ranks = [toks.localCheckpoint(eager=False)]
-    for k in range(n_rounds):
-        step = 1 << k
-        a = ranks[k].alias("a")
-        b = ranks[k].select(
-            F.col(id_col),
-            (F.col("pos") - F.lit(step)).alias("pos"),
-            F.col("_rank").alias("_r2"),
-        ).alias("b")
-        paired = a.join(b, [id_col, "pos"], "left").select(
-            id_col,
-            "pos",
-            F.col("_rank").alias("_r1"),
-            F.coalesce("_r2", F.lit(-1)).alias("_r2"),
-        )
-        nxt = _order_consistent_ranks(paired, ["_r1", "_r2"]).select(
-            id_col, "pos", "_rank"
-        )
-        # checkpoint: pins the monotonically_increasing_id-based rank
-        # values (nondeterministic across re-evaluation; the checkpoint
-        # stores partitions at FIRST evaluation and every reuse - the
-        # next doubling round and the LCP descent - reads the stored
-        # copy) and cuts the lineage. Lazy, so the 8 rounds pipeline
-        # into one job cascade instead of 8 blocking barriers.
-        ranks.append(nxt.localCheckpoint(eager=False))
-
-    final = ranks[n_rounds]
-    sorted_sfx = final.repartitionByRange(
-        "_rank", id_col, "pos"
-    ).sortWithinPartitions("_rank", id_col, "pos")
-    sid = sorted_sfx.rdd.zipWithIndex().map(
-        lambda t: (t[0][0], t[0][1], t[1])
-    ).toDF([id_col, "pos", "sid"]).localCheckpoint(eager=True)
-
-    a = sid.alias("a")
-    b = sid.select(
-        (F.col("sid") - F.lit(1)).alias("sid"),
-        F.col(id_col).alias("_bdoc"),
-        F.col("pos").alias("_bpos"),
-    ).alias("b")
-    pairs = (
-        a.join(b, "sid")
-        .select(
-            F.col(id_col).alias("_adoc"),
-            F.col("pos").alias("_apos"),
-            "_bdoc",
-            "_bpos",
-        )
-        .join(
-            nlen.select(
-                F.col(id_col).alias("_adoc"),
-                (F.col("_maxp") + 1).alias("_na"),
-            ),
-            "_adoc",
-        )
-        .join(
-            nlen.select(
-                F.col(id_col).alias("_bdoc"),
-                (F.col("_maxp") + 1).alias("_nb"),
-            ),
-            "_bdoc",
-        )
-        .withColumn("_da", F.lit(0))
-        .withColumn("_db", F.lit(0))
-        .withColumn("_lcp", F.lit(0))
-    )
-    for k in reversed(range(n_rounds)):
-        step = 1 << k
-        ra = ranks[k].select(
-            F.col(id_col).alias("_adoc"),
-            (F.col("pos")).alias("_ka"),
-            F.col("_rank").alias("_ra"),
-        )
-        rb = ranks[k].select(
-            F.col(id_col).alias("_bdoc"),
-            (F.col("pos")).alias("_kb"),
-            F.col("_rank").alias("_rb"),
-        )
-        pairs = (
-            pairs.withColumn("_ka", F.col("_apos") + F.col("_da"))
-            .withColumn("_kb", F.col("_bpos") + F.col("_db"))
-            .join(ra, ["_adoc", "_ka"], "left")
-            .join(rb, ["_bdoc", "_kb"], "left")
-        )
-        ok = (
-            (F.col("_ka") + F.lit(step) <= F.col("_na"))
-            & (F.col("_kb") + F.lit(step) <= F.col("_nb"))
-            & F.col("_ra").isNotNull()
-            & (F.col("_ra") == F.col("_rb"))
-        )
-        adv = F.when(ok, F.lit(step)).otherwise(F.lit(0))
-        pairs = (
-            pairs.withColumn("_lcp", F.col("_lcp") + adv)
-            .withColumn("_da", F.col("_da") + adv)
-            .withColumn("_db", F.col("_db") + adv)
-            .drop("_ka", "_kb", "_ra", "_rb")
-        )
-    both = pairs.select(
-        F.col("_adoc").alias(id_col),
-        F.col("_apos").alias("pos"),
-        F.col("_na").alias("n_tokens"),
-        F.col("_lcp").alias("dup_len"),
-    ).unionByName(
-        pairs.select(
-            F.col("_bdoc").alias(id_col),
-            F.col("_bpos").alias("pos"),
-            F.col("_nb").alias("n_tokens"),
-            F.col("_lcp").alias("dup_len"),
-        )
-    )
-    # positions in no neighbor pair exist only in a 1-suffix corpus;
-    # the left join below still emits them with dup_len 0
-    per_pos = both.groupBy(id_col, "pos", "n_tokens").agg(
-        F.max("dup_len").alias("dup_len")
-    )
-    return (
-        toks.select(id_col, "pos")
-        .join(per_pos, [id_col, "pos"], "left")
-        .select(
-            id_col,
-            "pos",
-            F.coalesce("dup_len", F.lit(0)).cast("long").alias("dup_len"),
-        )
-    )
+    return suffix_dup_lengths_from_blocks(frames, id_col=id_col)
 
 
 def exact_substr_stats(
@@ -2626,7 +2149,6 @@ def exact_substr_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_len: int = 8,
-    n_rounds: int = 7,
     lens: "DataFrame | None" = None,
 ) -> DataFrame:
     """Per-document exact-substring duplication report off the suffix
@@ -2639,9 +2161,7 @@ def exact_substr_stats(
     (id, pos, dup_len) frame so several report consumers share ONE
     suffix sort (the memoized-bar-frame discipline)."""
     if lens is None:
-        lens = suffix_dup_lengths(
-            df, id_col=id_col, text_col=text_col, n_rounds=n_rounds
-        )
+        lens = suffix_dup_lengths(df, id_col=id_col, text_col=text_col)
     per_doc = lens.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens"),
         F.count(F.when(F.col("dup_len") >= min_len, 1))
@@ -2684,34 +2204,25 @@ def suffix_eval_overlap(
     there ANY n-gram overlap'; this answers 'how LONG is the longest
     quoted passage' - the number a release review actually debates.
 
-    Merged suffix array: both sides' suffix hash-slices sort together
-    ONCE (the suffix_dup_lengths 'sort' plan); a train suffix's
-    maximal LCP against the whole eval set is attained at the NEAREST
-    eval suffix in either direction of the merged order, so the
-    eval-overlap of every train position costs two neighbor lookups,
-    never train x eval pairs. Nearest-eval ids are a per-partition
-    running max/min over the consecutive sids plus a
-    partition-boundary fix-up collected driver-side (one row per
-    partition - the same two-pass discipline as the sid assignment),
-    so no global single-task window exists in the plan.
+    Merged suffix array: both sides' suffixes are ordered together
+    ONCE by the bounded-prefix machinery (suffix_block_frames, side-
+    tagged); a train suffix's maximal LCP against the whole eval set
+    is attained at the NEAREST eval suffix in either direction of the
+    merged order, so the eval-overlap of every train position is two
+    running min-since-last-eval scans over the boundary LCPs
+    (suffix_eval_overlap_from_blocks), never train x eval pairs, and
+    no global single-task window exists in the plan.
 
     Returns (id_col, pos, eval_len) per train position; report
     consumer exact_decontamination_q aggregates per document.
     Ids must be unique across the two frames (they are: both sides
     come from the same documents table).
 
-    Both sides MUST be tagged and ranked in ONE dictionary build so
-    their ranks are comparable (r13 review finding, reproduced live:
-    one slicing call per side built independent dictionaries whose
-    int32 ranks are incompatible across sides - train 'apple' and
-    eval 'banana' both got rank 0, yielding a spurious overlap AND
-    missing the verbatim one, wrong on any corpus where the two
-    vocabularies differ; the repo corpus's coinciding train/eval
-    vocabularies had masked it) - satisfied here by merging the
-    frames before ONE suffix_block_frames call (since r14 this rides
-    the chunked machinery; the slice-sort twin stays available via
-    suffix_sorted_frame + suffix_eval_overlap_from_frame and is
-    pinned row-identical in tests)."""
+    Both sides MUST be ordered in ONE call: block ids are positions in
+    one call's order, so per-side calls would yield incomparable
+    frames. The streaming gate and exact_decontamination probe a
+    broadcast build_eval_suffix_index instead while the eval side fits
+    its token gate; this merged path is their fallback above it."""
     merged = train.select(
         F.col(id_col), F.col(text_col), F.lit(0).alias("_sd")
     ).unionByName(
@@ -3118,164 +2629,4 @@ def suffix_eval_stats_probe(
         text_col=text_col,
         run_threshold=run_threshold,
         stats=True,
-    )
-
-
-def suffix_eval_overlap_from_frame(
-    sidf: DataFrame, tbase: DataFrame, *, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, pos, eval_len) per TRAIN position derived from a merged
-    side-tagged suffix_sorted_frame (_side 1 = eval): the scan +
-    two-neighbor-LCP half of suffix_eval_overlap, factored out so the
-    frame can be shared with the dup-length derivation - the sort is
-    the expensive stage, and both consumers read the SAME sorted
-    corpus (r12 verdict #3)."""
-    from pyspark.sql import Window
-
-    spark = sidf.sparkSession
-    # nearest eval sid in each direction: per-partition running
-    # max/min of the eval-row sids, then the cross-partition boundary
-    # from the driver-collected per-partition eval extrema
-    emark = F.when(F.col("_side") == 1, F.col("sid"))
-    # both scans are RUNNING (unboundedPreceding..current) frames:
-    # Spark evaluates those incrementally in O(partition), while a
-    # (current..unboundedFollowing) frame re-scans the remaining rows
-    # per row - O(partition^2), measured 76 s on a 270k-suffix merge
-    # before this was flipped to a descending-order running min
-    w_fwd = (
-        Window.partitionBy("_pid")
-        .orderBy("sid")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_bwd = (
-        Window.partitionBy("_pid")
-        .orderBy(F.desc("sid"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # ONE aggregated scan yields both driver-side maps (r13 review:
-    # this ran as two separate full-frame jobs): the partition
-    # universe = every group, the per-partition eval extrema = the
-    # groups whose conditional min/max are non-null. Dimension-sized
-    # output, one row per partition.
-    stats = {
-        r["_pid"]: (r["mn"], r["mx"])
-        for r in sidf.groupBy("_pid")
-        .agg(
-            F.min(F.when(F.col("_side") == 1, F.col("sid"))).alias("mn"),
-            F.max(F.when(F.col("_side") == 1, F.col("sid"))).alias("mx"),
-        )
-        .collect()
-    }
-    pids = sorted(stats)
-    esids = {p: v for p, v in stats.items() if v[0] is not None}
-    rows, run = [], None
-    for p in pids:
-        prevb = run
-        if p in esids:
-            run = esids[p][1] if run is None else max(run, esids[p][1])
-        rows.append([p, prevb, None])
-    run = None
-    for i in range(len(pids) - 1, -1, -1):
-        rows[i][2] = run
-        p = pids[i]
-        if p in esids:
-            run = esids[p][0] if run is None else min(run, esids[p][0])
-    bdf = spark.createDataFrame(
-        [tuple(r) for r in rows], "_pid int, _prevb long, _nextb long"
-    )
-    # the window scan runs on a SLIM (sid, side, pid) projection -
-    # 20 bytes/row - so the suffix arrays never enter the window
-    # exchange; they rejoin by sid afterwards (review of the first
-    # cut: carrying the slices through two window functions plus the
-    # pid exchange re-moved the whole slice mass twice)
-    scanned = (
-        sidf.select("_side", "_pid", "sid")
-        .withColumn("_pe_loc", F.max(emark).over(w_fwd))
-        .withColumn("_ne_loc", F.min(emark).over(w_bwd))
-        .join(F.broadcast(bdf), "_pid")
-        .select(
-            "sid",
-            "_side",
-            F.coalesce("_pe_loc", "_prevb").alias("_pe"),
-            F.coalesce("_ne_loc", "_nextb").alias("_ne"),
-        )
-    )
-    trows = (
-        sidf.where(F.col("_side") == 0)
-        .select(id_col, "pos", "_sfx", "sid")
-        .join(scanned.where(F.col("_side") == 0).drop("_side"), "sid")
-    )
-    # eval side broadcasts: benchmark sets are small by nature (the
-    # decontamination-family discipline), so the two neighbor lookups
-    # never shuffle the train-side slice mass
-    eslices = sidf.where(F.col("_side") == 1).select(
-        F.col("sid").alias("_esid"), F.col("_sfx").alias("_esfx")
-    )
-
-    # LCP as ONE Arrow batch instead of interpreted per-element
-    # lambdas: the filter/element_at column form evaluates ~|suffix|
-    # interpreted ops per row and this operator needs it twice per
-    # train suffix (both eval neighbors) - measured 42 s at sf0.1 vs
-    # ~2 s for the numpy form (the repo's documented vectorized-Arrow
-    # exception class: the MinHash/SimHash signature-vote lesson).
-    # The null guard lives inside the batch: a missing eval neighbor
-    # scores 0 (F.least would silently SKIP the null operand and
-    # report a full-length overlap against nothing - caught by the
-    # pure-Python differential in tests/test_properties.py).
-    @pandas_udf("long")
-    def _lcp2_arrow(
-        a: pd.Series, p_: pd.Series, n_: pd.Series
-    ) -> pd.Series:
-        la, lp, ln = a.tolist(), p_.tolist(), n_.tolist()
-        out = np.zeros(len(la), dtype=np.int64)
-        for i, x in enumerate(la):
-            if x is None:
-                continue
-            xa = np.asarray(x)
-            best = 0
-            for y in (lp[i], ln[i]):
-                if y is None:
-                    continue
-                ya = np.asarray(y)
-                m = min(len(xa), len(ya))
-                neq = np.flatnonzero(xa[:m] != ya[:m])
-                best = max(best, int(neq[0]) if len(neq) else m)
-            out[i] = best
-        return pd.Series(out)
-
-    joined = (
-        trows.join(
-            F.broadcast(
-                eslices.withColumnRenamed(
-                    "_esid", "_pe"
-                ).withColumnRenamed("_esfx", "_pesfx")
-            ),
-            "_pe",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                eslices.withColumnRenamed(
-                    "_esid", "_ne"
-                ).withColumnRenamed("_esfx", "_nesfx")
-            ),
-            "_ne",
-            "left",
-        )
-        .select(
-            id_col,
-            "pos",
-            _lcp2_arrow(
-                F.col("_sfx"), F.col("_pesfx"), F.col("_nesfx")
-            ).alias("eval_len"),
-        )
-    )
-    all_pos = tbase.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.size("_h") - 1)).alias("pos"),
-    )
-    return all_pos.join(joined, [id_col, "pos"], "left").select(
-        id_col,
-        F.col("pos").cast("int").alias("pos"),
-        F.coalesce("eval_len", F.lit(0)).cast("long").alias("eval_len"),
     )

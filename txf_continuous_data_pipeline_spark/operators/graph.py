@@ -658,10 +658,13 @@ def incremental_components(
     EXACTLY (pinned in tests/test_graph.py, including the adversarial
     case of a later-arriving node whose id undercuts - and therefore
     relabels - an entire stored component)."""
+    # null endpoints are dropped, as in connected_components; a
+    # (x, NULL) edge would otherwise add a (NULL, NULL) label row
     e = _canon_edges(new_edges, src, dst)
     eps = (
         new_edges.select(F.col(src).alias("id"))
         .unionByName(new_edges.select(F.col(dst).alias("id")))
+        .where(F.col("id").isNotNull())
         .distinct()
         .localCheckpoint(eager=True)  # batch-bounded
     )

@@ -665,13 +665,12 @@ def exact_substr_stats_q(spark, sf_dir):
     run is, read off the corpus-wide suffix-array order over h60
     token hashes (lrs(i) = max LCP with the two suffix-array
     neighbors - exact, because the suffix sharing the longest prefix
-    is always SA-adjacent). The engine sorts suffix hash-slices once
-    (bounded-doc-length plan, memoized across the suffix-grain report
-    family via _cached_suffix_lens; the prefix-doubling twin for
-    unbounded docs is pinned row-identical in tests/test_properties.py
-    along with a pure-Python suffix-array differential); the oracle
-    sorts DuckDB lists natively and takes the same neighbor LCPs
-    (operators/dedup.suffix_dup_lengths / exact_substr_stats)."""
+    is always SA-adjacent). The engine orders the suffixes once with
+    the bounded-prefix machinery (operators/dedup.suffix_block_frames,
+    memoized across the suffix-grain report family via
+    _cached_suffix_lens and pinned to a pure-Python suffix array in
+    tests/test_properties.py); the oracle sorts DuckDB lists natively
+    and takes the same neighbor LCPs (operators/dedup.exact_substr_stats)."""
     from ..operators.dedup import exact_substr_stats
 
     docs = read_table(spark, sf_dir, "documents")
