@@ -19,9 +19,22 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from txf_continuous_data_pipeline_spark.queries import REGISTRY
+from txf_continuous_data_pipeline_spark.queries import REGISTRY, artifacts
 from txf_continuous_data_pipeline_spark.session import get_spark
 from txf_continuous_data_pipeline_spark.sources.io import timestamp_flavors
+
+
+def _artifact_use(before: dict) -> dict[str, list[str]]:
+    """Names of the session artifacts built and reused since the
+    `before` snapshot of artifacts.COUNTERS."""
+    use: dict[str, list[str]] = {"built": [], "reused": []}
+    for name, now in sorted(artifacts.COUNTERS.items()):
+        was = before.get(name, {"builds": 0, "hits": 0})
+        if now["builds"] > was["builds"]:
+            use["built"].append(name)
+        if now["hits"] > was["hits"]:
+            use["reused"].append(name)
+    return use
 
 
 def main() -> None:
@@ -111,14 +124,19 @@ def main() -> None:
     errors: dict[str, str] = {}
     shuffle_mb: dict[str, float] = {}
     n_tasks: dict[str, int] = {}
+    artifact_use: dict[str, dict[str, list[str]]] = {}
     before = _stage_snapshot()
     for name, (fn, _) in REGISTRY.items():
+        counters = {k: dict(v) for k, v in artifacts.COUNTERS.items()}
         t0 = time.perf_counter()
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 3)
         except Exception as e:  # noqa: BLE001 - reported per query
             errors[name] = str(e)[:200]
+        use = _artifact_use(counters)
+        if use["built"] or use["reused"]:
+            artifact_use[name] = use
         after = _stage_snapshot()
         new = [s for k, s in after.items() if k not in before]
         if after:
@@ -166,6 +184,9 @@ def main() -> None:
         # moved bytes = a real plan change
         "shuffle_read_mb": shuffle_mb,
         "n_tasks": n_tasks,
+        # which session artifacts (queries/artifacts.py) each query
+        # built and which it reused; queries that touch none are omitted
+        "artifacts": artifact_use,
         **({"errors": errors} if errors else {}),
     }
     carry: dict = {}

@@ -19,16 +19,3 @@ def q(name: str, sql: str | None):
 
     return deco
 
-
-def corpus_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
-    """THE session-cache key for per-corpus derived artifacts
-    (shingle indexes, trained merges, memoized pipeline frames):
-    applicationId (a new session rebuilds instead of erroring on gone
-    blocks) + the source file's mtime/size (a rewritten corpus
-    invalidates). One definition - the review-wave finding was three
-    hand-copied implementations of this stamp drifting independently."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    stamp = (os.path.getmtime(path), os.path.getsize(path))
-    return (spark.sparkContext.applicationId, sf_dir, stamp)

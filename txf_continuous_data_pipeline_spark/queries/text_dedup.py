@@ -27,12 +27,12 @@ from ..operators.textstats import (
     text_stats,
 )
 from ..sources import read_table
+from . import artifacts
 from .registry import q
 from .text_common import (  # noqa: F401
     _NEARDUP_COMP_CTES,
     _SHINGLES,
     _TOKS,
-    _corpus_key,
     _dup_span_removal_keepfirst_sql,
     _dup_span_removal_sql,
     _h60_sql,
@@ -413,23 +413,18 @@ def minhash_delta_dedup_q(spark, sf_dir):
     )
 
 
-# Per-corpus cache of the even-half MinHash index (the stored-corpus
-# stand-in): built once per corpus per session, checkpointed so repeat
-# invocations (driver verify + bench in one session) neither rebuild
-# the interpreted shingle transform nor leak new persisted frames -
-# the same pattern as _SHINGLE_BASE_CACHE.
-_MINHASH_INDEX_CACHE: dict = {}
-
-
+# Session artifact: the even-half MinHash index (the stored-corpus
+# stand-in), checkpointed so repeat invocations (driver verify + bench
+# in one session) neither rebuild the interpreted shingle transform nor
+# leak new persisted frames.
 def _corpus_half_index(spark, sf_dir):
     from ..operators.dedup import build_minhash_index
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _MINHASH_INDEX_CACHE:
+    def build():
         corpus = read_table(spark, sf_dir, "documents").where(
             F.col("doc_id") % 2 == 0
         )
-        # corpus shingles sliced from the SAME cached per-doc shingle
+        # corpus shingles sliced from the SAME stored per-doc shingle
         # frame minhash_neardup consumes - the interpreted shingle
         # transform runs once per corpus across all minhash queries
         raw = build_minhash_index(
@@ -439,11 +434,14 @@ def _corpus_half_index(spark, sf_dir):
                 F.col("doc_id") % 2 == 0
             ),
         )
-        _MINHASH_INDEX_CACHE[key] = {
+        return {
             name: frame.localCheckpoint(eager=True)
             for name, frame in raw.items()
         }
-    return _MINHASH_INDEX_CACHE[key]
+
+    return artifacts.get(
+        spark, ("minhash_half_index", sf_dir, "documents"), build
+    )
 
 
 def _hashed_shingles_sql(n: int) -> str:
@@ -580,32 +578,22 @@ LEFT JOIN (
 """
 
 
-_SUFFIX_FRAME_CACHE: dict = {}
-_SUFFIX_LENS_CACHE: dict = {}
-_EVAL_INDEX_CACHE: dict = {}
-
-
 def _cached_eval_index(spark, sf_dir):
-    """Session-memoized broadcast of the src0 eval-side suffix index
+    """Session artifact: the broadcast src0 eval-side suffix index
     (operators/dedup.build_eval_suffix_index) - the decontamination
-    arm's small frozen side, built once per corpus like the family's
-    other session caches. None when the eval side exceeds the
+    arm's small frozen side. None when the eval side exceeds the
     broadcast token gate; consumers then use the merged-machinery
     path."""
     from ..operators.dedup import build_eval_suffix_index
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _EVAL_INDEX_CACHE:
+    def build():
         docs = read_table(spark, sf_dir, "documents")
         idx = build_eval_suffix_index(
             docs.where(F.col("source") == "src0")
         )
-        _EVAL_INDEX_CACHE[key] = (
-            spark.sparkContext.broadcast(idx)
-            if idx is not None
-            else None
-        )
-    return _EVAL_INDEX_CACHE[key]
+        return spark.sparkContext.broadcast(idx) if idx is not None else None
+
+    return artifacts.get(spark, ("eval_index", sf_dir, "documents"), build)
 
 
 def _cached_suffix_frame(spark, sf_dir):
@@ -624,10 +612,9 @@ def _cached_suffix_frame(spark, sf_dir):
     shuffle (~L/2 slice amplification) to ~w ranks per position."""
     from ..operators.dedup import suffix_block_frames
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _SUFFIX_FRAME_CACHE:
+    def build():
         docs = read_table(spark, sf_dir, "documents")
-        _SUFFIX_FRAME_CACHE[key] = suffix_block_frames(
+        return suffix_block_frames(
             docs,
             id_col="doc_id",
             text_col="text",
@@ -635,25 +622,26 @@ def _cached_suffix_frame(spark, sf_dir):
                 F.lit(0)
             ),
         )
-    return _SUFFIX_FRAME_CACHE[key]
+
+    return artifacts.get(spark, ("suffix_frame", sf_dir, "documents"), build)
 
 
 def _cached_suffix_lens(spark, sf_dir):
-    """Memoized per-position longest-duplicated-run frame (doc_id,
-    pos, dup_len): the suffix ordering is the expensive stage, and TWO
-    report queries consume it (exact_substr_stats +
-    longest_dup_substrings) - the memoized-bar-frame discipline, so a
-    bench/driver session pays the ordering once per corpus (and the
-    shared _cached_suffix_frame blocks also serve the
-    decontamination arm)."""
+    """Session artifact: the per-position longest-duplicated-run frame
+    (doc_id, pos, dup_len). The suffix ordering is the expensive stage,
+    and TWO report queries consume it (exact_substr_stats +
+    longest_dup_substrings), so a bench/driver session pays the
+    ordering once per corpus (and the shared _cached_suffix_frame
+    blocks also serve the decontamination arm)."""
     from ..operators.dedup import suffix_dup_lengths_from_blocks
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _SUFFIX_LENS_CACHE:
-        _SUFFIX_LENS_CACHE[key] = suffix_dup_lengths_from_blocks(
+    return artifacts.get(
+        spark,
+        ("suffix_lens", sf_dir, "documents"),
+        lambda: suffix_dup_lengths_from_blocks(
             _cached_suffix_frame(spark, sf_dir), id_col="doc_id"
-        ).localCheckpoint(eager=True)
-    return _SUFFIX_LENS_CACHE[key]
+        ).localCheckpoint(eager=True),
+    )
 
 
 @q("exact_substr_stats", _EXACT_SUBSTR_SQL)

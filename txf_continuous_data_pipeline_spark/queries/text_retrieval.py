@@ -27,10 +27,10 @@ from ..operators.textstats import (
     text_stats,
 )
 from ..sources import read_table
+from . import artifacts
 from .registry import q
 from .text_common import (  # noqa: F401
     _TOKS,
-    _corpus_key,
     _h60_sql,
     _hash_feats,
 )
@@ -586,32 +586,19 @@ def hybrid_rrf_topk_q(spark, sf_dir):
     )
 
 
-# Session-scoped BM25 index path (per corpus stamp, under the session's
-# own applicationId dir - no cross-session sharing, so none of the
-# rename/lock choreography the shared IVFPQ path needs).
-_BM25_INDEX_CACHE: dict = {}
-
-
+# Session artifact: the BM25 index, written under the application's own
+# artifact dir - no cross-session sharing, so none of the rename/lock
+# choreography the shared IVFPQ path needs.
 def _bm25_index_path(spark, sf_dir):
-    import os
-    import re
-    import tempfile
-
     from ..operators.textstats import write_bm25_index
 
-    key = _corpus_key(spark, sf_dir)
-    if key not in _BM25_INDEX_CACHE:
-        app = re.sub(
-            r"[^A-Za-z0-9_-]", "_", spark.sparkContext.applicationId
-        )
-        path = os.path.join(
-            tempfile.gettempdir(), f"spark_graft_bm25_{app}",
-            re.sub(r"[^A-Za-z0-9_-]", "_", str(key)),
-        )
+    def build():
+        path = artifacts.artifact_dir(spark, "bm25_index")
         docs = read_table(spark, sf_dir, "documents")
         write_bm25_index(docs.where(F.col("doc_id") >= 5), path)
-        _BM25_INDEX_CACHE[key] = path
-    return _BM25_INDEX_CACHE[key]
+        return path
+
+    return artifacts.get(spark, ("bm25_index", sf_dir, "documents"), build)
 
 
 @q("bm25_index_topk", _bm25_sql())

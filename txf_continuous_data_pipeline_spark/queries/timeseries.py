@@ -30,6 +30,7 @@ from ..operators.sessions import day_session, night_session, with_session_labels
 from ..plans.pipeline import bar_pipeline_5m, bar_pipeline_60m, weekly_settle_config
 from ..sources import read_table
 
+from . import artifacts
 from .registry import q
 
 
@@ -665,35 +666,24 @@ WHERE session_id NOT IN (SELECT session_id FROM open_session)
 
 
 
-# Session cache of the gated 5-min pipeline output per corpus (the
+# Session artifact: the gated 5-min pipeline output per corpus (the
 # _neardup_components discipline applied to the reference flagship):
 # twenty registry call sites consume bar_pipeline_5m (the session
 # risk/microstructure family grew it past the original thirteen),
 # and each re-ran
 # the resample -> label -> backadjust -> gate chain from the events
-# scan. The memoized frame is persist()ed, NOT checkpointed - lineage
+# scan. The stored frame is persist()ed, NOT checkpointed - lineage
 # (and every plan pin reading it) is unchanged; only the blocks are
-# warm. Keyed on applicationId (a new session rebuilds, never errors)
-# and the source file's mtime/size (a rewritten corpus invalidates).
-# Bar grain is ~1/300th of tick grain, so the footprint is modest.
-_BARS_CACHE: dict = {}
-
-
+# warm. A rewritten events table supersedes the entry, and the store
+# unpersists the old frame (the release_materialized() lifecycle
+# cannot see it). Bar grain is ~1/300th of tick grain, so the
+# footprint is modest.
 def _cached_bar_pipeline(spark, sf_dir):
-    from .registry import corpus_key
-
-    key = corpus_key(spark, sf_dir, "events")
-    if key not in _BARS_CACHE:
-        # a rewritten corpus (new stamp) supersedes the old entry:
-        # unpersist and drop it, or its MEMORY_AND_DISK blocks would
-        # stay pinned for the process lifetime (review-wave finding -
-        # the release_materialized() lifecycle cannot see this frame)
-        for stale in [
-            k for k in _BARS_CACHE if k[:2] == key[:2] and k != key
-        ]:
-            _BARS_CACHE.pop(stale).unpersist()
-        _BARS_CACHE[key] = bar_pipeline_5m(spark, sf_dir).persist()
-    return _BARS_CACHE[key]
+    return artifacts.get(
+        spark,
+        ("bar_pipeline_5m", sf_dir, "events"),
+        lambda: bar_pipeline_5m(spark, sf_dir).persist(),
+    )
 
 
 @q("bar_pipeline_5m", _PIPELINE_SQL)
